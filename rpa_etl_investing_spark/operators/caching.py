@@ -199,8 +199,3 @@ def release_all() -> None:
         scopes = list(_STORE)
     for scope in scopes:
         release_scope(scope)
-
-
-def release_kept() -> None:
-    """Back-compat alias: release the default retire-previous scope."""
-    release_scope("kept")

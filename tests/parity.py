@@ -17,17 +17,20 @@ from rpa_etl_investing_spark.catalog import TABLES
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     import os
+    import shutil
     import tempfile
+    import weakref
 
     con = duckdb.connect()
     # Per-connection spill directory: concurrent connections (the
     # --threads sweep, parallel probe processes in the same cwd) all
     # default to ./.tmp/duckdb_temp_storage-*.tmp and corrupt each
     # other's spill files ("Could not read enough bytes" mid-query on
-    # the closure-heavy oracles at sf1).
-    con.execute(
-        f"SET temp_directory = '{tempfile.mkdtemp(prefix='duckspill_')}'"
-    )
+    # the closure-heavy oracles at sf1). The directory is removed when
+    # the connection object is released (or at interpreter exit).
+    spill = tempfile.mkdtemp(prefix="duckspill_")
+    weakref.finalize(con, shutil.rmtree, spill, True)
+    con.execute(f"SET temp_directory = '{spill}'")
     # DuckDB defaults its memory_limit to ~80% of PHYSICAL RAM, which
     # on a box also hosting Spark driver JVMs starves the Python
     # process itself (observed: MemoryError on a 718 KiB numpy alloc
