@@ -48,6 +48,8 @@ def _ship_package(spark: SparkSession) -> None:
         import tempfile
         import zipfile
 
+        from pyspark import SparkFiles
+
         import rpa_etl_investing_spark as pkg
 
         root = os.path.dirname(os.path.abspath(pkg.__file__))
@@ -57,9 +59,14 @@ def _ship_package(spark: SparkSession) -> None:
         # collision, or a file pre-created by another local user, would
         # get shipped via addPyFile and imported by every worker
         # (ADVICE r5). The _SHIPPED guard above already bounds this to
-        # one build per applicationId, so rebuilding costs nothing.
+        # one build per applicationId, so rebuilding costs nothing. The
+        # zip lives in the application's SparkFiles root, which Spark
+        # deletes when the context stops, so no zip outlives its
+        # application.
         fd, zpath = tempfile.mkstemp(
-            prefix="rpa_etl_investing_spark_", suffix=".zip"
+            prefix="rpa_etl_investing_spark_",
+            suffix=".zip",
+            dir=SparkFiles.getRootDirectory(),
         )
         with os.fdopen(fd, "wb") as fh:
             with zipfile.ZipFile(fh, "w") as z:

@@ -160,7 +160,29 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register the fixture tables as temp views for ``spark.sql`` queries."""
-    for name in names or TABLES:
-        tbl(spark, sf_dir, name).createOrReplaceTempView(name)
+def _sql_tables(text: str) -> list[str]:
+    """The fixture tables a SQL text names as ``{table}`` placeholders,
+    in first-use order."""
+    import string
+
+    fields = (f for _, f, _, _ in string.Formatter().parse(text) if f)
+    return list(dict.fromkeys(fields))
+
+
+def bind_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
+    """Run SQL text whose ``{table}`` placeholders name fixture tables,
+    each bound to :func:`tbl` for this call only.
+
+    PySpark registers every bound DataFrame under a uuid view name and
+    drops it once the text is analyzed, so the session's catalog is left
+    as it was found: no user view named ``orders`` is clobbered, and
+    concurrent calls over different scale-factor directories cannot
+    bind each other's files."""
+    return spark.sql(text, **{n: tbl(spark, sf_dir, n) for n in _sql_tables(text)})
+
+
+def plain_sql(text: str) -> str:
+    """Render ``{table}`` placeholders as plain table names — the form
+    the DuckDB oracle runs, where each fixture table is a view of the
+    same name."""
+    return text.format(**{n: n for n in _sql_tables(text)})

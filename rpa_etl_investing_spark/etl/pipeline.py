@@ -217,66 +217,66 @@ def load_star_schema(
     from rpa_etl_investing_spark.operators.caching import persist_once
 
     clean = persist_once(result.clean)
+    try:
+        def read_dim(name: str) -> DataFrame | None:
+            # Only the path-missing case means "first run" (main.py:20-22).
+            # Treating ANY read failure as first-run would silently rebuild the
+            # dim with fresh ids starting at 1 while historical fact rows still
+            # reference the old ids — corrupting every prior fact join — so
+            # anything else (corrupt footer, permissions, transient IO) re-raises.
+            import py4j.protocol
+            from pyspark.errors import AnalysisException
 
-    def read_dim(name: str) -> DataFrame | None:
-        # Only the path-missing case means "first run" (main.py:20-22).
-        # Treating ANY read failure as first-run would silently rebuild the
-        # dim with fresh ids starting at 1 while historical fact rows still
-        # reference the old ids — corrupting every prior fact join — so
-        # anything else (corrupt footer, permissions, transient IO) re-raises.
-        import py4j.protocol
-        from pyspark.errors import AnalysisException
+            try:
+                return spark.read.parquet(f"{warehouse}/{name}")
+            except (AnalysisException, py4j.protocol.Py4JJavaError) as e:
+                msg = str(e)
+                if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+                    return None
+                raise
 
-        try:
-            return spark.read.parquet(f"{warehouse}/{name}")
-        except (AnalysisException, py4j.protocol.Py4JJavaError) as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
+        dim_pais = upsert_dimension(read_dim("pais"), clean.select(F.col("pais").alias("nome")))
+        dim_pais.write.mode("overwrite").parquet(f"{warehouse}/pais.tmp")
+        dim_pais = spark.read.parquet(f"{warehouse}/pais.tmp")
 
-    dim_pais = upsert_dimension(read_dim("pais"), clean.select(F.col("pais").alias("nome")))
-    dim_pais.write.mode("overwrite").parquet(f"{warehouse}/pais.tmp")
-    dim_pais = spark.read.parquet(f"{warehouse}/pais.tmp")
+        dim_setor = upsert_dimension(read_dim("setor"), clean.select(F.col("setor").alias("nome")))
+        dim_setor.write.mode("overwrite").parquet(f"{warehouse}/setor.tmp")
+        dim_setor = spark.read.parquet(f"{warehouse}/setor.tmp")
 
-    dim_setor = upsert_dimension(read_dim("setor"), clean.select(F.col("setor").alias("nome")))
-    dim_setor.write.mode("overwrite").parquet(f"{warehouse}/setor.tmp")
-    dim_setor = spark.read.parquet(f"{warehouse}/setor.tmp")
+        # Publish the dim snapshots BEFORE appending the fact: the updated dims
+        # are supersets of the old ones, so publishing them first is always safe,
+        # whereas fact-first would — on a crash between the two steps — commit
+        # fact rows whose pais_id/setor_id exist only in the unswapped .tmp dirs.
+        # The rmtree+move pair itself is still not atomic (plain-parquet stand-in
+        # for MERGE INTO; a transactional table format is the production answer —
+        # SURVEY §7.4): a crash between them loses the old snapshot but never the
+        # new one, and never orphans committed fact keys.
+        import shutil
 
-    # Publish the dim snapshots BEFORE appending the fact: the updated dims
-    # are supersets of the old ones, so publishing them first is always safe,
-    # whereas fact-first would — on a crash between the two steps — commit
-    # fact rows whose pais_id/setor_id exist only in the unswapped .tmp dirs.
-    # The rmtree+move pair itself is still not atomic (plain-parquet stand-in
-    # for MERGE INTO; a transactional table format is the production answer —
-    # SURVEY §7.4): a crash between them loses the old snapshot but never the
-    # new one, and never orphans committed fact keys.
-    import shutil
+        for name in ("pais", "setor"):
+            shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+            shutil.move(f"{warehouse}/{name}.tmp", f"{warehouse}/{name}")
+        dim_pais = spark.read.parquet(f"{warehouse}/pais")
+        dim_setor = spark.read.parquet(f"{warehouse}/setor")
+        fact = resolve_fact_keys(clean, dim_pais, dim_setor, data_coleta)
 
-    for name in ("pais", "setor"):
-        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
-        shutil.move(f"{warehouse}/{name}.tmp", f"{warehouse}/{name}")
-    dim_pais = spark.read.parquet(f"{warehouse}/pais")
-    dim_setor = spark.read.parquet(f"{warehouse}/setor")
-    fact = resolve_fact_keys(clean, dim_pais, dim_setor, data_coleta)
+        # partition the append-only fact by ingestion date: snapshot queries
+        # and retention drops prune whole directories, and each day's append
+        # never rewrites previous days (the scale form of main.py:44's
+        # timestamped inserts)
+        fact.withColumn("dt_coleta", F.to_date("data_coleta")).write.mode(
+            "append"
+        ).partitionBy("dt_coleta").parquet(f"{warehouse}/indice_financeiro")
 
-    # partition the append-only fact by ingestion date: snapshot queries
-    # and retention drops prune whole directories, and each day's append
-    # never rewrites previous days (the scale form of main.py:44's
-    # timestamped inserts)
-    fact.withColumn("dt_coleta", F.to_date("data_coleta")).write.mode(
-        "append"
-    ).partitionBy("dt_coleta").parquet(f"{warehouse}/indice_financeiro")
-
-    metrics = {
-        "clean_rows": clean.count(),
-        "rejected_rows": result.rejects.count(),
-        "pais_rows": spark.read.parquet(f"{warehouse}/pais").count(),
-        "setor_rows": spark.read.parquet(f"{warehouse}/setor").count(),
-        "fact_rows": spark.read.parquet(f"{warehouse}/indice_financeiro").count(),
-    }
-    clean.unpersist()
-    return metrics
+        return {
+            "clean_rows": clean.count(),
+            "rejected_rows": result.rejects.count(),
+            "pais_rows": spark.read.parquet(f"{warehouse}/pais").count(),
+            "setor_rows": spark.read.parquet(f"{warehouse}/setor").count(),
+            "fact_rows": spark.read.parquet(f"{warehouse}/indice_financeiro").count(),
+        }
+    finally:
+        clean.unpersist()
 
 
 def flagship_top10(spark: SparkSession, warehouse: str) -> DataFrame:

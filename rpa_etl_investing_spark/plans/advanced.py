@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from rpa_etl_investing_spark.catalog import tbl
+from rpa_etl_investing_spark.catalog import bind_sql, tbl
 from rpa_etl_investing_spark.operators.asof import asof_join
 from rpa_etl_investing_spark.plans.registry import register
 
@@ -460,7 +460,7 @@ _PIVOT_SQL = """
     SELECT * FROM (
       SELECT o_orderpriority AS priority, o_orderstatus AS status,
              o_totalprice
-      FROM orders)
+      FROM {orders})
     PIVOT (
       COUNT(*) AS n, SUM(CAST(o_totalprice AS DECIMAL(27,2))) AS total
       FOR status IN ('O' AS o, 'F' AS f, 'P' AS p))
@@ -496,10 +496,7 @@ def sql_frontend_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     static (the precondition for pivot at scale — an unlisted pivot
     needs a distinct-scan to infer columns). Sums accumulate in
     DECIMAL before the double cast, per the repo-wide rule."""
-    from rpa_etl_investing_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ["orders"])
-    out = spark.sql(_PIVOT_SQL)
+    out = bind_sql(spark, sf_dir, _PIVOT_SQL)
     return out.select(
         "priority",
         F.col("o_n").cast("bigint").alias("o_n"),
@@ -568,7 +565,7 @@ _UNPIVOT_SQL = """
       SELECT o_orderkey,
              CAST(o_totalprice AS DOUBLE) AS price,
              CAST(o_custkey AS DOUBLE) AS custkey_d
-      FROM orders)
+      FROM {orders})
     UNPIVOT (
       val FOR measure IN (price, custkey_d))
     ORDER BY o_orderkey, measure
@@ -597,7 +594,4 @@ def sql_frontend_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard prep step before measure-generic aggregation (the
     expectations gate and column-entropy profiler both consume this
     shape)."""
-    from rpa_etl_investing_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ["orders"])
-    return spark.sql(_UNPIVOT_SQL)
+    return bind_sql(spark, sf_dir, _UNPIVOT_SQL)

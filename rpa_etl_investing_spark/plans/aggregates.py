@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rpa_etl_investing_spark.catalog import tbl
+from rpa_etl_investing_spark.catalog import bind_sql, plain_sql, tbl
 from rpa_etl_investing_spark.plans.registry import register
 
 
@@ -378,29 +378,20 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "agg_grouping_sets",
-    oracle="""
+_GROUPING_SETS_SQL = """
     SELECT l_returnflag AS rflag, l_linestatus AS lstatus,
            COUNT(*) AS n,
            (CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(27,2))) * 100 AS BIGINT) AS DOUBLE) / 100.0) AS qty
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """,
-)
+"""
+
+
+@register("agg_grouping_sets", oracle=plain_sql(_GROUPING_SETS_SQL))
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: explicit GROUPING SETS via the SQL API (same Catalyst plan as
     the DataFrame form)."""
-    tbl(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag AS rflag, l_linestatus AS lstatus,
-               COUNT(*) AS n,
-               (CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(27,2))) * 100 AS BIGINT) AS DOUBLE) / 100.0) AS qty
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
+    return bind_sql(spark, sf_dir, _GROUPING_SETS_SQL)
 
 
 @register(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from rpa_etl_investing_spark.catalog import maybe_broadcast, tbl
+from rpa_etl_investing_spark.catalog import bind_sql, maybe_broadcast, plain_sql, tbl
 from rpa_etl_investing_spark.plans.aggregates import dsum
 from rpa_etl_investing_spark.plans.registry import register
 
@@ -200,38 +200,25 @@ def analytics_disjunctive_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sql_frontend_flagship",
-    oracle="""
+_FLAGSHIP_SQL = """
     SELECT s.s_name AS nome, n.n_name AS pais, r.r_name AS regiao, s.s_acctbal AS maxima
-    FROM supplier s
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
+    FROM {supplier} s
+    JOIN {nation} n ON s.s_nationkey = n.n_nationkey
+    JOIN {region} r ON n.n_regionkey = r.r_regionkey
     WHERE r.r_name IN ('ASIA', 'AMERICA') AND s.s_acctbal > 0
     ORDER BY maxima DESC, nome
     LIMIT 10
-    """,
-)
+"""
+
+
+@register("sql_frontend_flagship", oracle=plain_sql(_FLAGSHIP_SQL))
 def sql_frontend_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL front-end: the flagship query shape (dim joins +
     IN-filter + top-k, ``main.py:149-157``) submitted as literal SQL via
-    ``spark.sql`` over registered views — proving the engine's second
-    entry point produces plans identical to the DataFrame API."""
-    from rpa_etl_investing_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ["supplier", "nation", "region"])
-    return spark.sql(
-        """
-        SELECT s.s_name AS nome, n.n_name AS pais, r.r_name AS regiao,
-               s.s_acctbal AS maxima
-        FROM supplier s
-        JOIN nation n ON s.s_nationkey = n.n_nationkey
-        JOIN region r ON n.n_regionkey = r.r_regionkey
-        WHERE r.r_name IN ('ASIA', 'AMERICA') AND s.s_acctbal > 0
-        ORDER BY maxima DESC, nome
-        LIMIT 10
-        """
-    )
+    ``spark.sql`` with each table bound for this call only — proving
+    the engine's second entry point produces plans identical to the
+    DataFrame API."""
+    return bind_sql(spark, sf_dir, _FLAGSHIP_SQL)
 
 
 @register(

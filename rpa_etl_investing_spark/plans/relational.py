@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rpa_etl_investing_spark.catalog import maybe_broadcast, tbl
+from rpa_etl_investing_spark.catalog import bind_sql, maybe_broadcast, plain_sql, tbl
 from rpa_etl_investing_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -526,8 +526,8 @@ def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_SQL = """
     SELECT s.s_suppkey, t.l_orderkey, t.l_extendedprice
-    FROM supplier s,
-    LATERAL (SELECT l_orderkey, l_extendedprice FROM lineitem l
+    FROM {supplier} s,
+    LATERAL (SELECT l_orderkey, l_extendedprice FROM {lineitem} l
              WHERE l.l_suppkey = s.s_suppkey
              ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
              LIMIT 2) t
@@ -535,7 +535,7 @@ _LATERAL_SQL = """
 """
 
 
-@register("join_lateral_topk_per_key", oracle=_LATERAL_SQL)
+@register("join_lateral_topk_per_key", oracle=plain_sql(_LATERAL_SQL))
 def join_lateral_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL join (J6 surface): each supplier's two most expensive
     line items via a correlated subquery with ORDER BY + LIMIT — the SQL
@@ -548,10 +548,7 @@ def join_lateral_topk_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     other entry point. Ordering carries the full tie-break chain; rows
     that still tie are byte-identical in every projected column, so the
     LIMIT cut is multiset-stable across engines."""
-    from rpa_etl_investing_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ["supplier", "lineitem"])
-    return spark.sql(_LATERAL_SQL)
+    return bind_sql(spark, sf_dir, _LATERAL_SQL)
 
 
 @register(

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from rpa_etl_investing_spark.catalog import tbl
 from rpa_etl_investing_spark.plans.registry import register
@@ -61,6 +62,21 @@ def _link_events(stream_dir: str, sf_dir: str) -> None:
         link = os.path.join(stream_dir, name)
         if not os.path.lexists(link):
             os.symlink(target, link)
+
+
+def _final_emission(spark: SparkSession, q: StreamingQuery, text: str) -> DataFrame:
+    """Drain the started memory-sink query ``q``, then run ``text`` over
+    its sink (``{sink}`` in the text) and drop the sink's view. The
+    analyzed result holds the sink's rows itself, so the session's
+    catalog keeps neither a view nor rows from the call."""
+    try:
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return spark.sql(text.format(sink=q.name))
+    finally:
+        spark.catalog.dropTempView(q.name)
 
 
 @register(
@@ -208,17 +224,15 @@ def stream_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFram
         .queryName(sink)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(
-        f"""
+    return _final_emission(
+        spark,
+        q,
+        """
         SELECT user_id, n_events FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
                                        ORDER BY n_events DESC) AS rn
           FROM {sink}) WHERE rn = 1
-        """
+        """,
     )
 
 
@@ -423,14 +437,12 @@ def stream_stateful_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(sink)
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # keep the emission from the most advanced state per key (n_days is
     # monotone across a key's emissions, so max-n_days = final)
-    return spark.sql(
-        f"""
+    return _final_emission(
+        spark,
+        q,
+        """
         SELECT event_type, n_days,
                CAST(FLOOR(1e6 * ewma + 0.5) AS BIGINT) AS ewma_q
         FROM (
@@ -438,7 +450,7 @@ def stream_stateful_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        ORDER BY n_days DESC) AS rn
           FROM {sink}) WHERE rn = 1
         ORDER BY event_type
-        """
+        """,
     )
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rpa_etl_investing_spark.catalog import maybe_broadcast, tbl
+from rpa_etl_investing_spark.catalog import bind_sql, maybe_broadcast, plain_sql, tbl
 from rpa_etl_investing_spark.plans.aggregates import davg, dsum
 from rpa_etl_investing_spark.plans.registry import register
 
@@ -161,38 +161,35 @@ def subquery_not_exists_dormant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IN_SUBQUERY_SQL = """
     SELECT p.p_brand, CAST(COUNT(*) AS BIGINT) AS n_parts
-    FROM part p
+    FROM {part} p
     WHERE p.p_partkey IN (
-        SELECT l.l_partkey FROM lineitem l WHERE l.l_quantity >= 49)
+        SELECT l.l_partkey FROM {lineitem} l WHERE l.l_quantity >= 49)
     GROUP BY p.p_brand
     ORDER BY p.p_brand
 """
 
 
-@register("subquery_in_bulk_parts", oracle=_IN_SUBQUERY_SQL)
+@register("subquery_in_bulk_parts", oracle=plain_sql(_IN_SUBQUERY_SQL))
 def subquery_in_bulk_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery via the SQL front-end: parts that ever shipped in
     near-max quantity, counted per brand. Submitted as literal SQL so
     Catalyst's RewritePredicateSubquery turns the IN into a left-semi
     join (no distinct materialization, no driver-side value list).
     """
-    from rpa_etl_investing_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ["part", "lineitem"])
-    return spark.sql(_IN_SUBQUERY_SQL)
+    return bind_sql(spark, sf_dir, _IN_SUBQUERY_SQL)
 
 
 _NOT_IN_SUBQUERY_SQL = """
     SELECT p.p_brand, CAST(COUNT(*) AS BIGINT) AS n_parts
-    FROM part p
+    FROM {part} p
     WHERE p.p_partkey NOT IN (
-        SELECT l.l_partkey FROM lineitem l WHERE l.l_quantity >= 49)
+        SELECT l.l_partkey FROM {lineitem} l WHERE l.l_quantity >= 49)
     GROUP BY p.p_brand
     ORDER BY p.p_brand
 """
 
 
-@register("subquery_not_in_null_aware", oracle=_NOT_IN_SUBQUERY_SQL)
+@register("subquery_not_in_null_aware", oracle=plain_sql(_NOT_IN_SUBQUERY_SQL))
 def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT IN over a subquery — the complement of
     ``subquery_in_bulk_parts``: parts that NEVER shipped in near-max
@@ -209,7 +206,4 @@ def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented cost of NOT IN semantics — prefer NOT EXISTS
     (``subquery_not_exists_dormant``) when nulls are impossible.
     """
-    from rpa_etl_investing_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ["part", "lineitem"])
-    return spark.sql(_NOT_IN_SUBQUERY_SQL)
+    return bind_sql(spark, sf_dir, _NOT_IN_SUBQUERY_SQL)

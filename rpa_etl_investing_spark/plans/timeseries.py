@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from rpa_etl_investing_spark.catalog import tbl
+from rpa_etl_investing_spark.catalog import bind_sql, plain_sql, tbl
 from rpa_etl_investing_spark.plans.aggregates import dsum
 from rpa_etl_investing_spark.plans.registry import register
 
@@ -157,25 +157,23 @@ _MONTH_SPINE_SQL = """
     SELECT m.month_start,
            CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders
     FROM months m
-    LEFT JOIN orders o ON DATE_TRUNC('month', o.o_orderdate) = m.month_start
+    LEFT JOIN {orders} o ON DATE_TRUNC('month', o.o_orderdate) = m.month_start
     GROUP BY m.month_start
     ORDER BY m.month_start
 """
 
 
-@register("sql_recursive_month_spine", oracle=_MONTH_SPINE_SQL)
+@register("sql_recursive_month_spine", oracle=plain_sql(_MONTH_SPINE_SQL))
 def sql_recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE through the SQL front-end (Spark ≥4.0
     ``WITH RECURSIVE``): generate the 1995-2001 month spine by
     recursion, then left-join order counts so empty months surface as
-    zero — the same SQL text runs verbatim on both engines. The
+    zero — the same SQL text runs on both engines, only the table
+    names bound differently. The
     recursion is bounded (84 rows) and evaluated iteratively by
     Catalyst's UnionLoop; data-sized work stays in the join, not the
     recursion."""
-    from rpa_etl_investing_spark.catalog import register_views
-
-    register_views(spark, sf_dir, ["orders"])
-    return spark.sql(_MONTH_SPINE_SQL)
+    return bind_sql(spark, sf_dir, _MONTH_SPINE_SQL)
 
 
 @register(

@@ -12,13 +12,17 @@ These tests hammer exactly those paths:
   8-thread pool WITH oracle comparison (the full-registry 8-thread
   sweep runs via ``scripts/verify_driver_contract.py --threads 8`` and
   is recorded in LOCAL_VERIFY; this keeps a fast regression in-suite),
-- _ship_package idempotence under concurrent first-touch.
+- _ship_package idempotence under concurrent first-touch,
+- SQL-text queries built from 4 threads over two scale factors, and the
+  session's catalog namespace after every SQL-text and streaming query.
 """
 
 from __future__ import annotations
 
 import pytest
 
+import inspect
+import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
@@ -29,8 +33,8 @@ from tests.parity import run_compare
 
 # Slice chosen to cover the shared-state paths: dedup sig caches
 # (keep_or_reuse from both sides of self-joins), graph per-round keeps,
-# scratch-dir writers, pandas UDFs (package ship), SQL temp views, and
-# plain joins/aggs for volume.
+# scratch-dir writers, pandas UDFs (package ship), and plain joins/aggs
+# for volume.
 CONCURRENT_SLICE = [
     "llm_minhash_pairs",
     "llm_minhash_bucket_audit",
@@ -221,3 +225,63 @@ def test_ship_package_concurrent_first_touch(spark):
         spark.sparkContext.addPyFile = orig_add
     assert len(builds) == 1, f"expected one ship, got {len(builds)}"
     assert app in contract._SHIPPED
+
+
+# Every registry query submitted as SQL text, found by its call to
+# catalog.bind_sql so a new one cannot be missed.
+SQL_TEXT_QUERIES = sorted(
+    n for n, q in plans.QUERIES.items() if "bind_sql(" in inspect.getsource(q.fn)
+)
+STREAM_QUERIES = ["stream_stateful_running_totals", "stream_stateful_ewma"]
+
+
+def test_sql_text_builds_bind_their_own_scale_factor(spark, sf_dir):
+    """4 threads × 40 builds of the SQL-text queries on one session,
+    alternating two scale-factor directories. Each build must scan only
+    files under its own directory: tables bound through shared,
+    fixed-name temp views let a build pick up the other thread's
+    scale factor."""
+    other = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.01")
+    if os.path.abspath(sf_dir) == other or not os.path.isdir(other):
+        pytest.skip(f"needs a second fixture directory at {other}")
+    assert len(SQL_TEXT_QUERIES) >= 8, SQL_TEXT_QUERIES
+    dirs = [os.path.abspath(sf_dir), other]
+    wrong: list[str] = []
+    lock = threading.Lock()
+
+    def build(tid: int) -> None:
+        for i in range(40):
+            d = dirs[(tid + i) % 2]
+            name = SQL_TEXT_QUERIES[(tid * 3 + i) % len(SQL_TEXT_QUERIES)]
+            files = plans.QUERIES[name].fn(spark, d).inputFiles()
+            stray = [f for f in files if f"{d}/" not in f]
+            if stray or not files:
+                with lock:
+                    wrong.append(f"t{tid}i{i} {name} @ {d}: {stray or 'no files'}")
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        list(pool.map(build, range(4)))
+    assert not wrong, f"{len(wrong)}/160 builds bound another directory: {wrong[:3]}"
+
+
+def test_queries_leave_session_namespace_unchanged(spark, sf_dir):
+    """Building and collecting every SQL-text query and both streaming
+    (memory-sink) queries leaves ``listTables()`` as it was, and a user
+    temp view named like a fixture table still resolves to its own
+    rows."""
+    spark.range(3).toDF("o_orderkey").createOrReplaceTempView("orders")
+
+    def tables() -> list[tuple]:
+        return sorted(
+            (t.name, t.tableType, t.isTemporary) for t in spark.catalog.listTables()
+        )
+
+    before = tables()
+    try:
+        for name in SQL_TEXT_QUERIES + STREAM_QUERIES:
+            assert plans.QUERIES[name].fn(spark, sf_dir).collect(), name
+        assert tables() == before
+        user_rows = spark.table("orders").orderBy("o_orderkey").collect()
+        assert [r.o_orderkey for r in user_rows] == [0, 1, 2]
+    finally:
+        spark.catalog.dropTempView("orders")

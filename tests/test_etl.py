@@ -218,3 +218,16 @@ def test_scd2_audit_invariants(spark, sf_dir):
     for r in rows:
         assert r.n_current == 1, f"user {r.user_id}: {r.n_current} current"
         assert r.n_inverted == 0, f"user {r.user_id}: inverted intervals"
+
+
+def test_failed_load_leaves_no_cached_relation(spark, raw_df, tmp_path):
+    """A load that raises part-way (here: a corrupt ``pais`` dimension,
+    which ``read_dim`` must re-raise rather than treat as a first run)
+    still unpersists its staged relation: the CacheManager ends empty."""
+    wh = tmp_path / "warehouse"
+    (wh / "pais").mkdir(parents=True)
+    (wh / "pais" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        load_star_schema(spark, raw_df, str(wh), PIN_TS)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
