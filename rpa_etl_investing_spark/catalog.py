@@ -9,6 +9,8 @@ pruning and partition-level parallelism for free.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
@@ -105,6 +107,23 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 _SCHEMA_CACHE: dict[tuple[str, str, int], object] = {}
 
 
+# Runtime confs ``tbl`` has already set, per session. Runtime SQL confs
+# belong to one SparkSession (``newSession()`` starts from the defaults
+# but shares the applicationId), so the key is the session object; a
+# session that is gone drops out of the map with it.
+_PINNED_CONFS: weakref.WeakKeyDictionary[SparkSession, set[str]] = weakref.WeakKeyDictionary()
+
+
+def _pin_conf(spark: SparkSession, key: str, value: str) -> None:
+    """Set runtime conf ``key`` on ``spark`` the first time ``tbl`` needs
+    it in that session, instead of one RPC per scan. A concurrent first
+    call may set it twice, which is harmless."""
+    pinned = _PINNED_CONFS.setdefault(spark, set())
+    if key not in pinned:
+        spark.conf.set(key, value)
+        pinned.add(key)
+
+
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table.
 
@@ -128,11 +147,10 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # in — the correctness driver's is bare, and the unbounded default
     # is what let graph_kcore's unrolled plan string OOM a 1g driver
     # heap under the 8-thread sweep (r9, verdict item #1). Same
-    # self-sufficiency rule as nanosAsLong below; runtime conf, one
-    # cheap RPC per scan.
-    spark.conf.set("spark.sql.maxPlanStringLength", str(MAX_PLAN_STRING_LENGTH))
+    # self-sufficiency rule as nanosAsLong below.
+    _pin_conf(spark, "spark.sql.maxPlanStringLength", str(MAX_PLAN_STRING_LENGTH))
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        _pin_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
     abspath = os.path.abspath(path)
     # ADVICE r10 #3: key on the path's mtime too, so a fixture
@@ -173,12 +191,25 @@ def bind_sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     """Run SQL text whose ``{table}`` placeholders name fixture tables,
     each bound to :func:`tbl` for this call only.
 
-    PySpark registers every bound DataFrame under a uuid view name and
-    drops it once the text is analyzed, so the session's catalog is left
-    as it was found: no user view named ``orders`` is clobbered, and
-    concurrent calls over different scale-factor directories cannot
-    bind each other's files."""
-    return spark.sql(text, **{n: tbl(spark, sf_dir, n) for n in _sql_tables(text)})
+    Each table is registered under a uuid view name and dropped once the
+    text is analyzed, so the session's catalog is left as it was found:
+    no user view named ``orders`` is clobbered, and concurrent calls over
+    different scale-factor directories cannot bind each other's files.
+    The views are dropped through the session catalog, not
+    ``spark.catalog.dropTempView`` (which PySpark's ``spark.sql(text,
+    **dfs)`` uses): that one also uncaches every cached plan with the
+    same result, such as a user's ``tbl(...).cache()``."""
+    import uuid
+
+    views = {n: f"_graft_{n}_{uuid.uuid4().hex}" for n in _sql_tables(text)}
+    session_catalog = spark._jsparkSession.sessionState().catalog()
+    try:
+        for n, view in views.items():
+            tbl(spark, sf_dir, n).createTempView(view)
+        return spark.sql(text.format(**views))
+    finally:
+        for view in views.values():
+            session_catalog.dropTempView(view)
 
 
 def plain_sql(text: str) -> str:

@@ -14,6 +14,9 @@ autoincrement surrogate keys            deterministic ``row_number`` over the
 (``main.py:26,31,36``)                  natural key, offset by current max
 silent malformed-row drop               rejects split into an observable
 (``main.py:116-117``)                   DataFrame with counts
+table schemas declared once as ORM      declared warehouse schemas
+models (``main.py:26-44``)              (``DIM_SCHEMA``, ``FACT_SCHEMA``):
+                                        no footer-inference job per read
 =====================================  =====================================
 
 At 100 TB the same shapes hold: the anti-join touches only the delta's
@@ -56,6 +59,37 @@ RAW_SCRAPE_SCHEMA = T.StructType(
     ]
 )
 
+# Schemas of the warehouse tables this module writes. Every warehouse read
+# passes them (``_read_warehouse``): a bare ``spark.read.parquet`` launches
+# a one-task Spark job per read just to infer the schema from a parquet
+# footer. ``tests/test_etl.py`` checks them against what Spark infers from
+# a load's output, so a writer change that drifts from them fails there.
+DIM_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType(), True),
+        T.StructField("nome", T.StringType(), True),
+    ]
+)
+FACT_SCHEMA = T.StructType(
+    [
+        T.StructField("nome", T.StringType(), True),
+        T.StructField("pais_id", T.LongType(), True),
+        T.StructField("setor_id", T.LongType(), True),
+        T.StructField("valor_atual", T.DoubleType(), True),
+        T.StructField("maxima", T.DoubleType(), True),
+        T.StructField("minima", T.DoubleType(), True),
+        T.StructField("variacao", T.DoubleType(), True),
+        T.StructField("data_coleta", T.TimestampType(), True),
+        # partition column: a directory name, not a parquet column
+        T.StructField("dt_coleta", T.DateType(), True),
+    ]
+)
+_WAREHOUSE_SCHEMAS = {
+    "pais": DIM_SCHEMA,
+    "setor": DIM_SCHEMA,
+    "indice_financeiro": FACT_SCHEMA,
+}
+
 
 @dataclass
 class TransformResult:
@@ -79,10 +113,9 @@ def classify_sector(nome: F.Column, pais: F.Column) -> F.Column:
     ).otherwise(F.coalesce(country_map[pais], F.lit(DEFAULT_SECTOR_OTHER)))
 
 
-def transform_raw(raw: DataFrame) -> TransformResult:
-    """Locale-parse the numeric cells and classify the sector
-    (``main.py:100-106``), splitting unparseable rows into ``rejects``
-    instead of dropping them silently."""
+def _parse_raw(raw: DataFrame) -> DataFrame:
+    """Locale-parse the numeric cells (``main.py:100-104``), flagging each
+    row ``_ok`` when every cell parsed."""
     parsed = raw.select(
         F.trim(F.col("nome")).alias("nome"),
         parse_brazilian_number("valor_atual_raw").alias("valor_atual"),
@@ -98,7 +131,12 @@ def transform_raw(raw: DataFrame) -> TransformResult:
         & F.col("minima").isNotNull()
         & F.col("variacao").isNotNull()
     )
-    parsed = parsed.withColumn("_ok", ok)
+    return parsed.withColumn("_ok", ok)
+
+
+def _split_parsed(parsed: DataFrame) -> TransformResult:
+    """Split :func:`_parse_raw`'s output on ``_ok``, classifying the sector
+    (``main.py:106``) of the clean rows."""
     clean = (
         parsed.filter("_ok")
         .drop("_ok")
@@ -106,6 +144,13 @@ def transform_raw(raw: DataFrame) -> TransformResult:
     )
     rejects = parsed.filter(~F.col("_ok")).drop("_ok")
     return TransformResult(clean=clean, rejects=rejects)
+
+
+def transform_raw(raw: DataFrame) -> TransformResult:
+    """Locale-parse the numeric cells and classify the sector
+    (``main.py:100-106``), splitting unparseable rows into ``rejects``
+    instead of dropping them silently."""
+    return _split_parsed(_parse_raw(raw))
 
 
 def upsert_dimension(
@@ -203,6 +248,12 @@ def resolve_fact_keys(
     )
 
 
+def _read_warehouse(spark: SparkSession, warehouse: str, table: str, suffix: str = "") -> DataFrame:
+    """Read ``{warehouse}/{table}{suffix}`` with ``table``'s declared
+    schema: no job is launched to infer it from a parquet footer."""
+    return spark.read.schema(_WAREHOUSE_SCHEMAS[table]).parquet(f"{warehouse}/{table}{suffix}")
+
+
 def load_star_schema(
     spark: SparkSession,
     raw: DataFrame,
@@ -213,22 +264,32 @@ def load_star_schema(
     upsert both dims → resolve FKs → single append write of the fact.
     Returns row-count metrics, including rejected rows (observable,
     unlike ``main.py:116-117``)."""
-    result = transform_raw(raw)
     from rpa_etl_investing_spark.operators.caching import persist_once
 
-    clean = persist_once(result.clean)
+    # parse the batch once: both counts and every use of the clean rows
+    # read the persisted parsed relation, never the raw batch again
+    parsed = persist_once(_parse_raw(raw))
     try:
+        clean = _split_parsed(parsed).clean
+        counts = parsed.agg(
+            F.count_if(F.col("_ok")).alias("clean"),
+            F.count_if(~F.col("_ok")).alias("rejected"),
+        ).first()
+
         def read_dim(name: str) -> DataFrame | None:
             # Only the path-missing case means "first run" (main.py:20-22).
             # Treating ANY read failure as first-run would silently rebuild the
             # dim with fresh ids starting at 1 while historical fact rows still
             # reference the old ids — corrupting every prior fact join — so
-            # anything else (corrupt footer, permissions, transient IO) re-raises.
+            # anything else (permissions, transient IO) re-raises. The read
+            # passes the declared schema and opens no parquet footer, so a
+            # corrupt file surfaces at its first scan instead: the
+            # ``{name}.tmp`` write below, before anything is published.
             import py4j.protocol
             from pyspark.errors import AnalysisException
 
             try:
-                return spark.read.parquet(f"{warehouse}/{name}")
+                return _read_warehouse(spark, warehouse, name)
             except (AnalysisException, py4j.protocol.Py4JJavaError) as e:
                 msg = str(e)
                 if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
@@ -237,11 +298,11 @@ def load_star_schema(
 
         dim_pais = upsert_dimension(read_dim("pais"), clean.select(F.col("pais").alias("nome")))
         dim_pais.write.mode("overwrite").parquet(f"{warehouse}/pais.tmp")
-        dim_pais = spark.read.parquet(f"{warehouse}/pais.tmp")
+        dim_pais = _read_warehouse(spark, warehouse, "pais", ".tmp")
 
         dim_setor = upsert_dimension(read_dim("setor"), clean.select(F.col("setor").alias("nome")))
         dim_setor.write.mode("overwrite").parquet(f"{warehouse}/setor.tmp")
-        dim_setor = spark.read.parquet(f"{warehouse}/setor.tmp")
+        dim_setor = _read_warehouse(spark, warehouse, "setor", ".tmp")
 
         # Publish the dim snapshots BEFORE appending the fact: the updated dims
         # are supersets of the old ones, so publishing them first is always safe,
@@ -256,8 +317,8 @@ def load_star_schema(
         for name in ("pais", "setor"):
             shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
             shutil.move(f"{warehouse}/{name}.tmp", f"{warehouse}/{name}")
-        dim_pais = spark.read.parquet(f"{warehouse}/pais")
-        dim_setor = spark.read.parquet(f"{warehouse}/setor")
+        dim_pais = _read_warehouse(spark, warehouse, "pais")
+        dim_setor = _read_warehouse(spark, warehouse, "setor")
         fact = resolve_fact_keys(clean, dim_pais, dim_setor, data_coleta)
 
         # partition the append-only fact by ingestion date: snapshot queries
@@ -269,14 +330,14 @@ def load_star_schema(
         ).partitionBy("dt_coleta").parquet(f"{warehouse}/indice_financeiro")
 
         return {
-            "clean_rows": clean.count(),
-            "rejected_rows": result.rejects.count(),
-            "pais_rows": spark.read.parquet(f"{warehouse}/pais").count(),
-            "setor_rows": spark.read.parquet(f"{warehouse}/setor").count(),
-            "fact_rows": spark.read.parquet(f"{warehouse}/indice_financeiro").count(),
+            "clean_rows": counts["clean"],
+            "rejected_rows": counts["rejected"],
+            "pais_rows": dim_pais.count(),
+            "setor_rows": dim_setor.count(),
+            "fact_rows": _read_warehouse(spark, warehouse, "indice_financeiro").count(),
         }
     finally:
-        clean.unpersist()
+        parsed.unpersist()
 
 
 def flagship_top10(spark: SparkSession, warehouse: str) -> DataFrame:
@@ -284,9 +345,9 @@ def flagship_top10(spark: SparkSession, warehouse: str) -> DataFrame:
     (``main.py:149-157``): top-10 by ``maxima`` where setor='Primário'
     and pais IN (China, EUA), two broadcast dim joins, with ``nome`` as
     deterministic tie-breaker."""
-    fact = spark.read.parquet(f"{warehouse}/indice_financeiro")
-    pais = spark.read.parquet(f"{warehouse}/pais")
-    setor = spark.read.parquet(f"{warehouse}/setor")
+    fact = _read_warehouse(spark, warehouse, "indice_financeiro")
+    pais = _read_warehouse(spark, warehouse, "pais")
+    setor = _read_warehouse(spark, warehouse, "setor")
     return (
         fact.join(F.broadcast(pais), fact.pais_id == pais.id)
         .join(F.broadcast(setor), fact.setor_id == setor.id)

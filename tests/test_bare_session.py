@@ -69,12 +69,12 @@ out = {{}}
 out["__entry__"] = len(contract.entry(spark).collect())
 qs = contract.queries()
 for name in {names!r}:
-    # Reset session-persistent confs between queries: a conf set by an
-    # earlier query's tbl() call (e.g. parquet nanosAsLong) would mask a
-    # later query that forgot to set it for its own raw reads.
-    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    # A fresh session (runtime confs at their defaults) per query: a conf
+    # set by an earlier query's tbl() call (e.g. parquet nanosAsLong)
+    # would mask a later query that forgot to set it for its own raw reads.
+    fresh = spark.newSession()
     try:
-        out[name] = qs[name](spark, {sf_dir!r}).count()
+        out[name] = qs[name](fresh, {sf_dir!r}).count()
     except Exception as e:  # noqa: BLE001
         out[name] = f"ERROR {{type(e).__name__}}: {{e}}"
 print("RESULT:" + json.dumps(out))

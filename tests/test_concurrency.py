@@ -13,8 +13,9 @@ These tests hammer exactly those paths:
   sweep runs via ``scripts/verify_driver_contract.py --threads 8`` and
   is recorded in LOCAL_VERIFY; this keeps a fast regression in-suite),
 - _ship_package idempotence under concurrent first-touch,
-- SQL-text queries built from 4 threads over two scale factors, and the
-  session's catalog namespace after every SQL-text and streaming query.
+- SQL-text queries built from 4 threads over two scale factors, the
+  session's catalog namespace after every SQL-text and streaming query,
+  and a user's cached scan after a SQL-text query over the same table.
 """
 
 from __future__ import annotations
@@ -285,3 +286,26 @@ def test_queries_leave_session_namespace_unchanged(spark, sf_dir):
         assert [r.o_orderkey for r in user_rows] == [0, 1, 2]
     finally:
         spark.catalog.dropTempView("orders")
+
+
+def test_sql_text_query_keeps_user_cache(spark, sf_dir):
+    """A SQL-text query over ``lineitem`` leaves a user's cached
+    ``lineitem`` scan cached and no temp view behind: the per-call views
+    are dropped without uncaching plans that share their result."""
+    from rpa_etl_investing_spark.catalog import bind_sql, tbl
+
+    def temp_views() -> list[str]:
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    before = temp_views()
+    cached = tbl(spark, sf_dir, "lineitem").cache()
+    try:
+        cached.count()
+        level = cached.storageLevel
+        assert level.useMemory or level.useDisk
+        n = bind_sql(spark, sf_dir, "SELECT COUNT(*) AS n FROM {lineitem}").first().n
+        assert n == cached.count()
+        assert cached.storageLevel == level
+        assert temp_views() == before
+    finally:
+        cached.unpersist()

@@ -129,6 +129,45 @@ def test_full_load_and_flagship_query(spark, raw_df, tmp_path):
     assert m2["fact_rows"] == 14
 
 
+@pytest.fixture(scope="module")
+def loaded_warehouse(spark, raw_df, tmp_path_factory):
+    wh = str(tmp_path_factory.mktemp("declared") / "warehouse")
+    load_star_schema(spark, raw_df, wh, PIN_TS)
+    return wh
+
+
+def test_flagship_build_runs_no_spark_job(spark, loaded_warehouse):
+    """Building the flagship query launches no Spark job: its three
+    warehouse reads pass declared schemas instead of inferring each from
+    a parquet footer (one job per read)."""
+    sc = spark.sparkContext
+    group = "test-flagship-build"
+    sc.setJobGroup(group, "build flagship_top10 without collecting")
+    try:
+        flagship_top10(spark, loaded_warehouse)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_declared_warehouse_schemas_match_written(spark, loaded_warehouse):
+    """Drift guard: the schema Spark infers from a load's output equals
+    the declared one, nullability aside, so a change to what the load
+    writes must change the declared schema with it."""
+    from rpa_etl_investing_spark.etl.pipeline import DIM_SCHEMA, FACT_SCHEMA
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for table, declared in (
+        ("pais", DIM_SCHEMA),
+        ("setor", DIM_SCHEMA),
+        ("indice_financeiro", FACT_SCHEMA),
+    ):
+        inferred = spark.read.parquet(f"{loaded_warehouse}/{table}").schema
+        assert fields(inferred) == fields(declared), table
+
+
 def test_incremental_streaming_load(spark, tmp_path):
     """The reference's repeated-run loop as a foreachBatch stream: two
     arriving files → two micro-batch loads; dims stay unique, facts

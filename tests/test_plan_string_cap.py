@@ -26,13 +26,21 @@ def _explain_len(df) -> int:
 
 
 def test_tbl_pins_plan_string_cap(spark, sf_dir):
-    """Any scan through the catalog must (re)pin the cap — the driver's
-    session starts with Spark's ~2 GiB default."""
-    spark.conf.unset("spark.sql.maxPlanStringLength")
-    tbl(spark, sf_dir, "lineitem")
-    assert spark.conf.get("spark.sql.maxPlanStringLength") == str(
+    """The first scan through the catalog in a session pins the cap —
+    the driver's session starts with Spark's ~2 GiB default — and the
+    first ``events`` scan pins ``nanosAsLong``. ``tbl`` sets each once
+    per session, so a ``newSession()`` (own runtime confs, same
+    applicationId as a session already scanned) must still get both."""
+    tbl(spark, sf_dir, "events")
+    fresh = spark.newSession()
+    for key in ("spark.sql.maxPlanStringLength", "spark.sql.legacy.parquet.nanosAsLong"):
+        fresh.conf.unset(key)
+    tbl(fresh, sf_dir, "lineitem")
+    assert fresh.conf.get("spark.sql.maxPlanStringLength") == str(
         MAX_PLAN_STRING_LENGTH
     )
+    tbl(fresh, sf_dir, "events")
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
 
 
 @pytest.mark.slow
