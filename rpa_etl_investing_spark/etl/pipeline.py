@@ -17,6 +17,8 @@ silent malformed-row drop               rejects split into an observable
 table schemas declared once as ORM      declared warehouse schemas
 models (``main.py:26-44``)              (``DIM_SCHEMA``, ``FACT_SCHEMA``):
                                         no footer-inference job per read
+dimensions upserted one after the       both dimensions staged concurrently,
+other (``main.py:122-135``)             published only once both are staged
 =====================================  =====================================
 
 At 100 TB the same shapes hold: the anti-join touches only the delta's
@@ -28,12 +30,14 @@ date.
 from __future__ import annotations
 
 import datetime as _dt
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
+from pyspark.util import inheritable_thread_target
 
 from rpa_etl_investing_spark.etl.sector_maps import (
     DEFAULT_SECTOR_BRAZIL,
@@ -262,8 +266,13 @@ def load_star_schema(
 ) -> dict[str, int]:
     """Full load (``main.py:159-173`` minus the browser): transform →
     upsert both dims → resolve FKs → single append write of the fact.
-    Returns row-count metrics, including rejected rows (observable,
-    unlike ``main.py:116-117``)."""
+
+    The two dimensions read nothing of each other, so each is upserted
+    and staged to ``{name}.tmp`` on its own thread, in the caller's job
+    group; both are published only after both have staged, and the fact
+    is appended after that. Returns row-count metrics, including
+    rejected rows (observable, unlike ``main.py:116-117``); the dimension
+    counts are those of the staged snapshots."""
     from rpa_etl_investing_spark.operators.caching import persist_once
 
     # parse the batch once: both counts and every use of the clean rows
@@ -296,13 +305,20 @@ def load_star_schema(
                     return None
                 raise
 
-        dim_pais = upsert_dimension(read_dim("pais"), clean.select(F.col("pais").alias("nome")))
-        dim_pais.write.mode("overwrite").parquet(f"{warehouse}/pais.tmp")
-        dim_pais = _read_warehouse(spark, warehouse, "pais", ".tmp")
+        def stage(name: str) -> int:
+            dim = upsert_dimension(read_dim(name), clean.select(F.col(name).alias("nome")))
+            dim.write.mode("overwrite").parquet(f"{warehouse}/{name}.tmp")
+            return _read_warehouse(spark, warehouse, name, ".tmp").count()
 
-        dim_setor = upsert_dimension(read_dim("setor"), clean.select(F.col("setor").alias("nome")))
-        dim_setor.write.mode("overwrite").parquet(f"{warehouse}/setor.tmp")
-        dim_setor = _read_warehouse(spark, warehouse, "setor", ".tmp")
+        # Each target is wrapped on the caller's thread: a pool thread does
+        # not inherit the caller's Spark local properties, so without it the
+        # staging jobs would leave the caller's job group (cancelJobGroup,
+        # per-group job accounting). Both must stage before anything is
+        # published.
+        dims = ("pais", "setor")
+        with ThreadPoolExecutor(max_workers=len(dims)) as pool:
+            staged = [pool.submit(inheritable_thread_target(stage), name) for name in dims]
+            dim_rows = dict(zip(dims, (f.result() for f in staged)))
 
         # Publish the dim snapshots BEFORE appending the fact: the updated dims
         # are supersets of the old ones, so publishing them first is always safe,
@@ -314,7 +330,7 @@ def load_star_schema(
         # new one, and never orphans committed fact keys.
         import shutil
 
-        for name in ("pais", "setor"):
+        for name in dims:
             shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
             shutil.move(f"{warehouse}/{name}.tmp", f"{warehouse}/{name}")
         dim_pais = _read_warehouse(spark, warehouse, "pais")
@@ -332,8 +348,8 @@ def load_star_schema(
         return {
             "clean_rows": counts["clean"],
             "rejected_rows": counts["rejected"],
-            "pais_rows": dim_pais.count(),
-            "setor_rows": dim_setor.count(),
+            "pais_rows": dim_rows["pais"],
+            "setor_rows": dim_rows["setor"],
             "fact_rows": _read_warehouse(spark, warehouse, "indice_financeiro").count(),
         }
     finally:

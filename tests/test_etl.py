@@ -270,3 +270,54 @@ def test_failed_load_leaves_no_cached_relation(spark, raw_df, tmp_path):
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         load_star_schema(spark, raw_df, str(wh), PIN_TS)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_load_keeps_callers_job_group(spark, raw_df, tmp_path):
+    """Every Spark job a load starts, on whichever thread, runs in the
+    caller's job group, so ``cancelJobGroup`` and per-group job counts
+    cover the whole load."""
+    sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
+    group = "test-load-job-group"
+    sc.setJobGroup(group, "load_star_schema")
+    try:
+        first = scheduler.nextJobId()
+        load_star_schema(spark, raw_df, str(tmp_path / "warehouse"), PIN_TS)
+        last = scheduler.nextJobId()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    started = set(range(first, last))
+    assert started, "the load ran no Spark job"
+    assert started <= in_group, sorted(started - in_group)
+
+
+def test_failed_second_dimension_publishes_nothing(spark, raw_df, tmp_path):
+    """A corrupt ``setor`` fails the load after ``pais`` has staged a new
+    country: nothing is published, no fact is appended, no relation stays
+    cached and no staging thread is left running."""
+    import threading
+
+    wh = tmp_path / "warehouse"
+    load_star_schema(spark, raw_df, str(wh), PIN_TS)
+    new_country = spark.createDataFrame(
+        [("Nikkei 225", "38.000,00", "38.500,00", "37.900,00", "+0,30%", "Japão")],
+        RAW_SCRAPE_SCHEMA,
+    )
+    pais_before = sorted(map(tuple, spark.read.parquet(str(wh / "pais")).collect()))
+    facts_before = spark.read.parquet(str(wh / "indice_financeiro")).count()
+    parts = list((wh / "setor").glob("part-*.parquet"))
+    assert parts
+    for part in parts:
+        part.write_bytes(b"not a parquet file")
+
+    spark.catalog.clearCache()
+    threads = threading.active_count()
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        load_star_schema(
+            spark, raw_df.unionByName(new_country), str(wh), PIN_TS + dt.timedelta(days=1)
+        )
+    assert threading.active_count() == threads
+    assert sorted(map(tuple, spark.read.parquet(str(wh / "pais")).collect())) == pais_before
+    assert spark.read.parquet(str(wh / "indice_financeiro")).count() == facts_before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

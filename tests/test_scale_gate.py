@@ -33,6 +33,8 @@ from rpa_etl_investing_spark.plans import QUERIES
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/sf1"
+# this checkout's scripts/, wherever the checkout lives
+SCRIPTS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 
 # bench name -> (registry name, broadcasts, sortmerges, shuffledhash,
 #                exchanges) in the FINAL adaptive sf0.1 plan
@@ -90,7 +92,7 @@ EXPECTED_SF01 = {
 def _features(spark, reg_name: str, sf_dir: str) -> dict:
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, SCRIPTS_DIR)
     from scale_probe import checksum_all_columns, plan_features
 
     df = QUERIES[reg_name].fn(spark, sf_dir)
