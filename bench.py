@@ -6,7 +6,12 @@ Runs the headline queries from the registry against
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
     {"metric": "headline_total", "value": N, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+     "queries": {"q1": sec, ...}, "sf": 0.1, ...}
+
+Beside the timings, ``codegen`` gives per query the generated classes
+compiled during its timed reps and the milliseconds spent compiling
+them: after the warm-up every shape should be in the session's codegen
+cache, so a non-zero count names a query that recompiles.
 
 Execution is a ``noop``-format write so every query runs end-to-end on
 executors (full scan → shuffle → sink) without driver-side collect —
@@ -23,7 +28,7 @@ import re
 import sys
 import time
 
-from rpa_etl_investing_spark.session import get_spark
+from rpa_etl_investing_spark.session import codegen_stats, get_spark
 
 # Headline set: one representative per heavy operator family (scan-agg,
 # broadcast star join, top-k, window, as-of merge, event-time bucketing,
@@ -105,8 +110,9 @@ def main() -> int:
         except Exception:
             pass  # warm-up failures surface in the timed pass
 
-    # 5 reps per query: first executions still pay per-plan codegen +
-    # JIT, and the host steals CPU in multi-second bursts (measured:
+    # 5 reps per query: first executions still pay JIT (the warm-up
+    # compiled their generated classes; ``codegen`` shows any that were
+    # not), and the host steals CPU in multi-second bursts (measured:
     # identical code varies ±30% run-to-run, and median-of-3 still
     # wandered ~15% between same-code runs). The HEADLINE metric is the
     # median — min systematically reports the optimistic tail and can
@@ -114,10 +120,14 @@ def main() -> int:
     # min is kept as a secondary column so the noise floor stays visible.
     timings: dict[str, float] = {}
     timings_min: dict[str, float] = {}
+    codegen: dict[str, dict[str, float]] = {}
     for bench_name, reg_name in HEADLINE.items():
+        compiles0, ms0 = codegen_stats(spark)
         reps = sorted(_run(spark, QUERIES[reg_name].fn, sf_dir) for _ in range(5))
+        compiles1, ms1 = codegen_stats(spark)
         timings[bench_name] = round(reps[2], 3)
         timings_min[bench_name] = round(reps[0], 3)
+        codegen[bench_name] = {"compiles": compiles1 - compiles0, "compile_ms": round(ms1 - ms0, 1)}
 
     aqe_skew: dict[str, bool] = {}
     for bench_name in _AQE_PROBE:
@@ -148,6 +158,7 @@ def main() -> int:
         "min_total": round(sum(timings_min.values()), 3),
         "subtotal_12": round(sub12, 3),
         "aqe_skew_join_applied": aqe_skew,
+        "codegen": codegen,
         "sf": sf,
     }
     print(json.dumps(out))

@@ -30,6 +30,7 @@ date.
 from __future__ import annotations
 
 import datetime as _dt
+import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -180,7 +181,13 @@ def upsert_dimension(
     join). The only ordered window runs over the ≤256-row bucket-count
     frame, which is constant-sized at any data scale.
     """
-    incoming = incoming_names.select(F.col(name_col).alias("nome")).distinct()
+    # a null natural key gets no id; dropped here, before the bucket
+    # counts, so it does not shift the ids of the keys after it
+    incoming = (
+        incoming_names.select(F.col(name_col).alias("nome"))
+        .where(F.col("nome").isNotNull())
+        .distinct()
+    )
     if existing is None:
         new_rows = incoming
         base = None
@@ -286,24 +293,18 @@ def load_star_schema(
         ).first()
 
         def read_dim(name: str) -> DataFrame | None:
-            # Only the path-missing case means "first run" (main.py:20-22).
+            # Only a missing directory means "first run" (main.py:20-22); the
+            # warehouse is a local path (publishing below moves directories).
             # Treating ANY read failure as first-run would silently rebuild the
             # dim with fresh ids starting at 1 while historical fact rows still
             # reference the old ids — corrupting every prior fact join — so
-            # anything else (permissions, transient IO) re-raises. The read
-            # passes the declared schema and opens no parquet footer, so a
-            # corrupt file surfaces at its first scan instead: the
-            # ``{name}.tmp`` write below, before anything is published.
-            import py4j.protocol
-            from pyspark.errors import AnalysisException
-
-            try:
-                return _read_warehouse(spark, warehouse, name)
-            except (AnalysisException, py4j.protocol.Py4JJavaError) as e:
-                msg = str(e)
-                if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                    return None
-                raise
+            # any other failure raises. The read passes the declared schema
+            # and opens no parquet footer, so a corrupt file surfaces at its
+            # first scan: the ``{name}.tmp`` write below, before anything is
+            # published.
+            if not os.path.exists(f"{warehouse}/{name}"):
+                return None
+            return _read_warehouse(spark, warehouse, name)
 
         def stage(name: str) -> int:
             dim = upsert_dimension(read_dim(name), clean.select(F.col(name).alias("nome")))

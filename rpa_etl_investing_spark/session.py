@@ -4,7 +4,9 @@ One shared local session tuned for the fixture scale factors
 (sf0.001–sf0.1 on local[N]) while keeping settings that scale to a real
 cluster: AQE on (runtime coalescing + skew-join handling), Arrow for any
 pandas interchange, UTC session timezone so timestamps hash identically
-to the DuckDB oracle.
+to the DuckDB oracle, and a compiled-code cache sized to hold every
+generated class the engine's query mix needs, so a query shape that
+comes back is not recompiled.
 """
 
 from __future__ import annotations
@@ -16,6 +18,9 @@ from pyspark.sql import SparkSession
 from rpa_etl_investing_spark.catalog import (
     MAX_PLAN_STRING_LENGTH as _MAX_PLAN_STR,
 )
+
+# Entries in Spark's compiled-class cache (``spark.sql.codegen.cache.maxEntries``).
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -64,6 +69,16 @@ def get_spark(
         # multi-minute 90%-system-time storms during early heavy queries
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Janino compiles each generated class on the driver before the
+        # query's first task (~10 ms a class). Spark's default LRU of 100
+        # entries is smaller than one pass over the query mix, so it
+        # evicts every class before its shape runs again. Distinct classes
+        # measured on a never-evicting cache: one perfbench llm_curation_10x
+        # pass 224, one etl_load round ~130, bench.py's 17 headline queries
+        # 303; 2048 holds all three with headroom. Still an LRU. A static
+        # conf: it takes effect only when the session is created, and
+        # sessions built without get_spark keep Spark's default
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # plan-tree strings are diagnostics; unbounded rendering of a
         # deeply-unrolled iterative plan OOMed a bare 1g heap under the
         # concurrent sweep (r8 judge finding) — catalog.tbl() also sets
@@ -79,3 +94,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_stats(spark: SparkSession) -> tuple[int, float]:
+    """Generated classes compiled in this JVM so far, and the milliseconds
+    spent compiling them. A cache hit compiles nothing and adds to
+    neither; difference two readings to attribute compiles to a query."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    # the histogram above only samples its values; CodeGenerator keeps
+    # the exact nanosecond sum that the same compile call adds to
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return compiles, nanos / 1e6

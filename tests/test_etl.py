@@ -76,6 +76,21 @@ def test_upsert_dimension_deterministic_and_idempotent(spark, raw_df):
     assert dim2.count() == 4
 
 
+def test_upsert_dimension_null_key_shifts_no_id(spark):
+    """A null natural key gets no id and takes no slot: the new ids stay
+    dense, into an empty dimension and after existing ones."""
+    incoming = spark.createDataFrame(
+        [("Brasil",), ("EUA",), ("Japão",), (None,), ("EUA",)], "nome string"
+    )
+    first = {r["nome"]: r["id"] for r in upsert_dimension(None, incoming).collect()}
+    assert sorted(first) == ["Brasil", "EUA", "Japão"]
+    assert sorted(first.values()) == [1, 2, 3]
+
+    existing = spark.createDataFrame([(1, "Brasil"), (2, "China")], "id long, nome string")
+    second = {r["nome"]: r["id"] for r in upsert_dimension(existing, incoming).collect()}
+    assert second == {"Brasil": 1, "China": 2, "EUA": 3, "Japão": 4}
+
+
 def test_upsert_dimension_plan_is_distributed(spark, raw_df):
     """r1 verdict item #7: the new-key ranking window must be hash-
     partitioned by the md5 bucket — a single-partition Exchange feeding
