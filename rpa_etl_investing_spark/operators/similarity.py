@@ -343,6 +343,60 @@ def lloyd_refine_centroids(
     )
 
 
+def subspace_sq_dists(
+    vectors: DataFrame, codebook: DataFrame, n_sub: int, sub_dim: int
+) -> DataFrame:
+    """Quantized squared L2 distance between every vector
+    (``vec_id``, ``embedding``) and every codeword (``cid``, ``cemb``),
+    per subspace: one row per (vector, codeword) with columns
+    ``vec_id``, ``cid``, ``dq0`` … ``dq{n_sub-1}``, where ``dq{j}`` sums
+    ``floor((x_i − c_i)² · 1e10 + 0.5)`` over the components
+    ``i DIV sub_dim = j`` as an exact BIGINT (order-independent, so
+    equal to any other accumulation of the same terms).
+
+    Plan shape: vectors are hash-partitioned by ``vec_id`` and
+    posexploded to (vec_id, pos, x); the codebook is posexploded to
+    (cid, pos, c) and broadcast (k·dim rows — bounded by construction);
+    an equi-join on ``pos`` pairs each component with every codeword's
+    component, and one hash aggregate grouped by (vec_id, cid) sums
+    each subspace's terms. The aggregate reuses the ``vec_id``
+    partitioning, so it adds no shuffle, and the output stays
+    partitioned by ``vec_id`` for a per-vector argmin above it. No
+    higher-order function appears anywhere, so the whole stage runs in
+    generated code — the ``aggregate(sequence(…), …)`` form this
+    replaces ran every term through interpreted lambdas (Spark's array
+    HOFs are ``CodegenFallback``).
+
+    A vector or codeword whose length is not ``n_sub · sub_dim`` (or
+    that is null) fails the query with ``raise_error`` in the exploding
+    projection: the exploded sum would otherwise add up fewer terms."""
+    from rpa_etl_investing_spark.operators.dedup import spread
+
+    dim = n_sub * sub_dim
+
+    def exploded(df: DataFrame, key: str, vec: str, out: str) -> DataFrame:
+        return df.selectExpr(
+            key,
+            f"posexplode(CASE WHEN size({vec}) = {dim} THEN {vec} ELSE "
+            f"raise_error(concat('subspace_sq_dists: vector ', CAST({key} AS STRING), "
+            f"' has length ', CAST(size({vec}) AS STRING), ', expected {dim}')) END) "
+            f"AS (pos, {out})",
+        )
+
+    x = exploded(spread(vectors, "vec_id"), "vec_id", "embedding", "x")
+    c = exploded(codebook, "cid", "cemb", "c")
+    term = (
+        f"CAST(FLOOR((CAST(x AS DOUBLE) - CAST(c AS DOUBLE)) * "
+        f"(CAST(x AS DOUBLE) - CAST(c AS DOUBLE)) * {_SCALE_SQL} + 0.5D) AS BIGINT)"
+    )
+    return (
+        x.join(F.broadcast(c), "pos")
+        .selectExpr("vec_id", "cid", f"pos DIV {sub_dim} AS j", f"{term} AS t")
+        .groupBy("vec_id", "cid")
+        .agg(*[F.expr(f"SUM(IF(j = {j}, t, 0)) AS dq{j}") for j in range(n_sub)])
+    )
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,

@@ -3050,51 +3050,34 @@ def llm_embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     code assignment is deterministic on both engines and err_q is an
     integer sum.
 
-    Scale shape: one pass over the corpus against a BROADCAST codebook
-    (m·k = 32 subvectors — bounded by construction, the legitimate
-    broadcast class); the per-(vec, subspace) argmin is a struct-min
-    hash aggregate, and codes pivot back with one more keyed
-    aggregate. Training the codebook properly would run the Lloyd
-    refinement already implemented for IVF (operators/similarity.py)
+    Scale shape: the encode is ``subspace_sq_dists``
+    (operators/similarity.py): the corpus, hash-partitioned by vec_id,
+    posexplodes to one row per component and joins on position to the
+    posexploded codebook (k·dim = 512 rows — bounded by construction,
+    broadcast); one grouped SUM per (vector, centroid) yields all four
+    subspace distances, in generated code with no higher-order
+    function. The four per-subspace argmins are struct-min aggregates
+    over the same vec_id partitioning, so they add no shuffle.
+    Training the codebook properly would run the Lloyd refinement
+    already implemented for IVF (operators/similarity.py)
     per subspace; the seed-codebook form keeps the oracle exact."""
+    from rpa_etl_investing_spark.operators.similarity import subspace_sq_dists
+
     emb = tbl(spark, sf_dir, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    pairs = emb.select("vec_id", "embedding").crossJoin(F.broadcast(cent))
-
-    def dq(j: int):
-        lo = j * 16
-        return F.expr(
-            f"CAST(aggregate(sequence({lo}, {lo + 15}), CAST(0 AS BIGINT), "
-            f"(acc, i) -> acc + CAST(FLOOR((CAST(embedding[i] AS DOUBLE) - "
-            f"CAST(cemb[i] AS DOUBLE)) * (CAST(embedding[i] AS DOUBLE) - "
-            f"CAST(cemb[i] AS DOUBLE)) * 1e10 + 0.5) AS BIGINT)) AS BIGINT)"
-        )
-
-    alld = pairs.select(
-        "vec_id",
-        "cid",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(j).alias("j"), dq(j).alias("dq"))
-                for j in range(4)
-            ])
-        ).alias("s"),
-    ).select("vec_id", F.col("s.j").alias("j"), "cid", F.col("s.dq").alias("dq"))
-    best = (
-        alld.groupBy("vec_id", "j")
-        .agg(F.min(F.struct("dq", "cid")).alias("b"))
-        .select("vec_id", "j", F.col("b.cid").alias("cid"), F.col("b.dq").alias("dq"))
-    )
+    cent = emb.filter("vec_id < 8").selectExpr("vec_id AS cid", "embedding AS cemb")
+    d = subspace_sq_dists(emb.select("vec_id", "embedding"), cent, n_sub=4, sub_dim=16)
     return (
-        best.groupBy("vec_id")
+        d.groupBy("vec_id")
         .agg(
             *[
-                F.max(F.when(F.col("j") == j, F.col("cid"))).alias(f"c{j}")
+                F.expr(f"min(named_struct('d', dq{j}, 'c', cid)) AS b{j}")
                 for j in range(4)
-            ],
-            F.sum("dq").cast("bigint").alias("err_q"),
+            ]
+        )
+        .selectExpr(
+            "vec_id",
+            *[f"b{j}.c AS c{j}" for j in range(4)],
+            "CAST(b0.d + b1.d + b2.d + b3.d AS BIGINT) AS err_q",
         )
         .orderBy("vec_id")
     )
@@ -3607,19 +3590,22 @@ def llm_ivfpq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_j LUT[j][code_j] — candidate vectors are never touched, only
     their byte codes and the query's 4×8 lookup table.
 
-    One cross-join pass against the BROADCAST codebook (8 centroids =
-    both coarse quantizer and per-subspace codebook, the vec_id<8 seed
-    convention) yields the whole index in a single hash aggregate per
-    vector: the IVF cell is argmin of the TOTAL quantized L2 (sum of
-    the 4 subspace distances) and each PQ code is argmin of its own
-    subspace distance — five struct-min aggregates sharing one
-    shuffle. The LUT is |Q|·m·k = 8·4·8 rows (bounded, broadcast), the
-    probe list 2 rows per query (broadcast), so the only corpus-scale
-    work is the map-side encode and a probed-cell equi-join whose
-    candidate count scales with cell occupancy, not corpus size. Every
-    distance is an exact BIGINT on the 1e10 grid (the _PQ_ORACLE
-    convention); ranking tie-breaks on neighbor_id, so both engines
-    produce identical top-5 lists.
+    The encode is ``subspace_sq_dists`` (operators/similarity.py)
+    against the codebook (8 centroids = both coarse quantizer and
+    per-subspace codebook, the vec_id<8 seed convention): the corpus is
+    hash-partitioned by vec_id and posexploded, each component joins on
+    position to the BROADCAST posexploded codebook, and one grouped SUM
+    per (vector, centroid) gives the four subspace distances in
+    generated code. Over that vec_id partitioning, one aggregate per
+    vector takes the IVF cell (argmin of the TOTAL quantized L2) and
+    each PQ code (argmin of its own subspace distance) — five
+    struct-min aggregates, no further shuffle. The LUT is |Q|·m·k =
+    8·4·8 cells (carried as a map in the 2 broadcast probe rows per
+    query), so the only corpus-scale work is the encode and a
+    probed-cell equi-join whose candidate count scales with cell
+    occupancy, not corpus size. Every distance is an exact BIGINT on
+    the 1e10 grid (the _PQ_ORACLE convention); ranking tie-breaks on
+    neighbor_id, so both engines produce identical top-5 lists.
 
     At 100 TB: the encode is one pass (store the codes — 5 bytes/vec
     here); queries touch only probed cells' code lists; ADC arithmetic
@@ -3628,48 +3614,34 @@ def llm_ivfpq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (codes of v − centroid) and Lloyd-trained codebooks drop in via
     `lloyd_refine_centroids` without changing this plan shape.
 
-    r11: two rewrites were prototyped here and MEASURED (guide §1):
+    Rewrites measured here:
 
     - Encode via a broadcast codebook ARRAY + map-side `array_min`
-      argmins (zero encode shuffles/sorts) — REJECTED: bit-identical
-      results, but the per-row struct-array HOF allocation churn ran
-      2× SLOWER than this fan-out + min(struct) form at the 100×
-      probe (10.4-11.0 s vs 4.8-5.7 s interleaved A/B; sf0.1 1.4-1.7 s
-      vs 1.2 s). The SortAggregate pair + corpus exchange it removes
-      carries narrow partially-aggregated rows, which is cheaper than
-      interpreted struct-array materialization at every scale probed.
+      argmins — REJECTED: bit-identical, but the per-row
+      struct-array HOF allocation churn ran 2× SLOWER at the 100×
+      probe than the cross join + min(struct) form it would replace.
+    - Encode via per-subspace ``aggregate(sequence(lo, lo+15), …)``
+      lambdas over a broadcast cross join — REPLACED by the
+      exploded grouped SUM: Spark's array HOFs are CodegenFallback, so
+      every one of the n·k·dim squared differences ran interpreted.
     - ADC via a per-query LUT MAP carried in the 16 broadcast probe
-      rows — KEPT: the per-candidate distance is one map-side 4-term
-      BIGINT add ((query, neighbor) is unique in cand since each
+      rows — KEPT: the per-candidate distance is one map-side
+      4-term BIGINT add ((query, neighbor) is unique in cand since each
       vector lives in exactly one cell, so the old SUM over 4 melted
       rows equals this add), replacing the ×4 candidate melt, the LUT
       broadcast join, and the (query, neighbor) re-aggregate."""
+    from rpa_etl_investing_spark.operators.similarity import subspace_sq_dists
+
     emb = tbl(spark, sf_dir, "embeddings")
     cent = emb.filter("vec_id < 8").selectExpr(
         "vec_id AS cid", "embedding AS cemb"
     )
     corp = emb.filter("vec_id >= 8").select("vec_id", "embedding")
-    pairs = corp.join(F.broadcast(cent))
-
-    def dq_sql(j: int) -> str:
-        lo = j * 16
-        return (
-            f"CAST(aggregate(sequence({lo}, {lo + 15}), CAST(0 AS BIGINT), "
-            f"(acc, i) -> acc + CAST(FLOOR((CAST(embedding[i] AS DOUBLE) - "
-            f"CAST(cemb[i] AS DOUBLE)) * (CAST(embedding[i] AS DOUBLE) - "
-            f"CAST(cemb[i] AS DOUBLE)) * 1e10 + 0.5) AS BIGINT)) AS BIGINT)"
-        )
-
-    # one concrete projection so each dq_j is computed once per
-    # (vector, centroid) row (HOFs sit outside codegen CSE — the
-    # rolling-hash discipline), then every argmin shares one shuffle.
-    # Expression trees are single parsed SQL strings (r10 driver-latency
-    # pass: each Column op is a ~1-3 ms py4j round trip on this host).
-    scored = pairs.selectExpr(
-        "vec_id",
-        "cid",
-        *[f"{dq_sql(j)} AS dq{j}" for j in range(4)],
-    ).selectExpr("*", "dq0 + dq1 + dq2 + dq3 AS dqtot")
+    # one row per (vector, centroid), partitioned by vec_id, so every
+    # argmin below groups or windows by vec_id without a shuffle
+    scored = subspace_sq_dists(corp, cent, n_sub=4, sub_dim=16).selectExpr(
+        "*", "dq0 + dq1 + dq2 + dq3 AS dqtot"
+    )
 
     enc = (
         scored.groupBy("vec_id")

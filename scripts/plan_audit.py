@@ -37,7 +37,7 @@ NOTES = {
     "q14_simhash64_pairs": "persisted 64-bit signatures; bucket-aggregated pair generation with bit_count Hamming filtered BEFORE the pair-distinct (r11) — no band self-join",
     "q15_heavy_hitters": "per-partition Misra-Gries in Arrow batches, broadcast-semi-join thin, exact recount; total tokens via map-side sum(size(split)) — the corpus explodes once (r11)",
     "q16_skew_dup_payments": "same-key self-join, residual integer band predicates; AQE skew split carves whale keys at scale (r10 measured the banded variant 4× slower at 100× — rejected, see SCALE.md)",
-    "q17_ivfpq_adc": "codebook folded into one broadcast array cell: encode + argmins fully map-side (no SortAggregate, no corpus exchange); per-query LUT map carried in the 16 probe rows, ADC distance a 4-term projection add; single exchange = final top-5 window (r11)",
+    "q17_ivfpq_adc": "encode = corpus repartitioned by vec_id, posexploded, joined on position to the broadcast posexploded codebook, one grouped SUM per (vector, centroid) in generated code; cell + code argmins are min(struct) aggregates on the same partitioning (no extra shuffle); per-query LUT map carried in the 16 probe rows, ADC distance a 4-term projection add; final top-5 window",
 }
 
 

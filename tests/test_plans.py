@@ -309,19 +309,108 @@ def test_lloyd_refine_matches_wide_sum_reference(spark, sf_dir):
 
 
 def test_ivfpq_adc_is_map_side(spark, sf_dir):
-    """r11 plan pin: llm_ivfpq_adc_search's ADC stage reads a per-query
-    LUT MAP carried in the broadcast probe rows — the plan must contain
-    NO Generate (the old ×4 candidate melt) and exactly ONE
-    BroadcastHashJoin (probes onto enc; the old LUT re-attach join is
-    gone), with the distance a map-side projection (map_from_entries
-    present, no post-join aggregate). The encode keeps its fan-out +
-    min(struct) SortAggregate form: the r11 array_min map-side variant
-    was bit-identical but measured 2× SLOWER at 100× (struct-array HOF
-    allocation churn) and was rejected — see OPTIMIZATION_r11.md."""
+    """Plan pin: llm_ivfpq_adc_search's ADC stage reads a per-query LUT
+    MAP carried in the broadcast probe rows — no ×4 candidate melt
+    (``stack``) and no LUT re-attach join, the distance a map-side
+    projection (map_from_entries present). The encode is the
+    ``subspace_sq_dists`` kernel: its size-checked posexplodes (corpus
+    vectors and codebook, once for the corpus encode and once for the
+    8 query vectors) are the only Generate nodes, and its codebook
+    joins on ``pos`` are broadcast hash joins — exactly three with the
+    probe join, and no nested-loop cross join left."""
     plan = _plan(QUERIES["llm_ivfpq_adc_search"].fn(spark, sf_dir))
-    assert "Generate" not in plan, plan
-    assert plan.count("BroadcastHashJoin") == 1, plan
+    generates = [ln for ln in plan.splitlines() if "Generate " in ln]
+    assert len(generates) == 4, plan
+    assert all("Generate posexplode(CASE WHEN (size(" in g for g in generates), plan
+    assert "stack(" not in plan, plan
+    assert plan.count("BroadcastHashJoin") == 3, plan
+    assert "NestedLoopJoin" not in plan, plan
     assert "map_from_entries" in plan, plan
+
+
+def _pq_codes(dists):
+    """Per-vector PQ codes and IVF cell from (vec_id, cid, dq0..dq3):
+    argmin on (distance, cid), the tie-break both PQ queries use."""
+    return (
+        dists.groupBy("vec_id")
+        .agg(
+            F.expr("min(named_struct('d', dq0 + dq1 + dq2 + dq3, 'c', cid)).c AS cell"),
+            *[F.expr(f"min(named_struct('d', dq{j}, 'c', cid)).c AS code{j}") for j in range(4)],
+        )
+    )
+
+
+def _reference_sq_dists(vectors, codebook):
+    """The encode the kernel replaced: per subspace, an interpreted
+    ``aggregate(sequence(lo, lo+15), …)`` over a cross join."""
+    def dq(j):
+        lo = j * 16
+        return (
+            f"CAST(aggregate(sequence({lo}, {lo + 15}), CAST(0 AS BIGINT), "
+            f"(acc, i) -> acc + CAST(FLOOR((CAST(embedding[i] AS DOUBLE) - "
+            f"CAST(cemb[i] AS DOUBLE)) * (CAST(embedding[i] AS DOUBLE) - "
+            f"CAST(cemb[i] AS DOUBLE)) * 1e10 + 0.5) AS BIGINT)) AS BIGINT) AS dq{j}"
+        )
+
+    return vectors.crossJoin(codebook).selectExpr("vec_id", "cid", *[dq(j) for j in range(4)])
+
+
+def test_subspace_sq_dists_matches_aggregate_reference(spark, sf_dir):
+    """The exploded grouped-SUM encode equals the interpreted lambda
+    encode it replaced: identical BIGINT distances for every (vector,
+    codeword, subspace), hence identical PQ codes and IVF cells."""
+    from rpa_etl_investing_spark.operators.similarity import subspace_sq_dists
+
+    emb = tbl(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    cent = emb.filter("vec_id < 8").selectExpr("vec_id AS cid", "embedding AS cemb")
+    got = subspace_sq_dists(emb, cent, n_sub=4, sub_dim=16)
+    ref = _reference_sq_dists(emb, cent)
+    got_rows = sorted(got.collect())
+    assert len(got_rows) == emb.count() * 8
+    assert got_rows == sorted(ref.collect())
+    assert sorted(_pq_codes(got).collect()) == sorted(_pq_codes(ref).collect())
+
+
+def test_subspace_sq_dists_tie_breaks_on_codeword_id(spark):
+    """A vector exactly between two codewords: both encodes see the same
+    distance for both, and the argmin keeps the lower codeword id."""
+    from rpa_etl_investing_spark.operators.similarity import subspace_sq_dists
+
+    schema = "vec_id BIGINT, embedding ARRAY<FLOAT>"
+    vecs = spark.createDataFrame([(100, [1.0] * 64), (101, [4.5] * 32 + [0.0] * 32)], schema)
+    cent = spark.createDataFrame(
+        [(5, [2.0] * 64), (3, [0.0] * 64), (9, [7.0] * 64)], schema
+    ).selectExpr("vec_id AS cid", "embedding AS cemb")
+    got = subspace_sq_dists(vecs, cent, n_sub=4, sub_dim=16)
+    ref = _reference_sq_dists(vecs, cent)
+    assert sorted(got.collect()) == sorted(ref.collect())
+    codes = {r.vec_id: r for r in _pq_codes(got).collect()}
+    assert sorted(codes.values()) == sorted(_pq_codes(ref).collect())
+    # vector 100 is 1.0 from codewords 3 and 5 in every component
+    assert (codes[100].cell, codes[100].code0, codes[100].code3) == (3, 3, 3)
+    # vector 101: 4.5 is 2.5 from codewords 5 and 9 in subspaces 0-1
+    assert (codes[101].code0, codes[101].code1) == (5, 5)
+    assert (codes[101].code2, codes[101].code3) == (3, 3)
+
+
+@pytest.mark.parametrize("query", ["llm_embedding_pq", "llm_ivfpq_adc_search"])
+def test_pq_queries_reject_short_vector(spark, sf_dir, tmp_path, query):
+    """A 40-dim vector in a 64-dim corpus fails both PQ queries instead
+    of being encoded from the 40 components it has."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    emb = t["embedding"].to_pylist()
+    i = t["vec_id"].to_pylist().index(20)
+    emb[i] = emb[i][:40]
+    t = t.set_column(
+        t.schema.get_field_index("embedding"), "embedding",
+        pa.array(emb, t.schema.field("embedding").type),
+    )
+    pq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(Exception, match="has length 40, expected 64"):
+        QUERIES[query].fn(spark, str(tmp_path)).collect()
 
 
 def test_heavy_hitters_explodes_corpus_once(spark, sf_dir):

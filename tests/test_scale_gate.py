@@ -80,12 +80,16 @@ EXPECTED_SF01 = {
     "q16_skew_dup_payments": ("etl_duplicate_payment_scan", 1, 0, 0, 1),
     # r11: the ADC stage's ×4 candidate melt + LUT broadcast join +
     # (query, neighbor) re-aggregate are replaced by a per-query LUT
-    # map carried in the 16 broadcast probe rows — one broadcast join
-    # left (probes onto enc). Exchanges: encode min(struct) aggregate,
-    # probes windows, final top-5 window, + the checksum probe's own
-    # aggregate. (The map-side array_min ENCODE variant was measured
-    # 2× slower at 100× and rejected — OPTIMIZATION_r11.md §4.)
-    "q17_ivfpq_adc": ("llm_ivfpq_adc_search", 1, 0, 0, 4),
+    # map carried in the 16 broadcast probe rows. (The map-side
+    # array_min ENCODE variant was measured 2× slower at 100× and
+    # rejected — OPTIMIZATION_r11.md §4.) The encode is the
+    # subspace_sq_dists kernel: the exploded codebook joins on pos as a
+    # broadcast hash join in the corpus encode and in the 8-query
+    # encode, plus probes onto enc = 3 broadcasts. Exchanges: the
+    # kernel's vec_id repartition (corpus and query side — the argmin
+    # aggregate and the probe windows reuse it), the final top-5
+    # window, + the checksum probe's own aggregate.
+    "q17_ivfpq_adc": ("llm_ivfpq_adc_search", 3, 0, 0, 4),
 }
 
 
@@ -130,10 +134,10 @@ def test_headline_plan_shape_sf01(spark, bench_name):
     "bench_name,broadcasts",
     [
         # bounded-by-construction broadcasts that must SURVIVE 10×
-        # (r11: 1 — the LUT re-attach join is gone [per-query LUT map
-        # rides in the probe rows], leaving probes→enc as the single
-        # broadcast hash join)
-        ("q17_ivfpq_adc", 1),
+        # (the LUT re-attach join is gone [per-query LUT map rides in
+        # the probe rows]; probes→enc plus the codebook joins of the
+        # corpus and query encodes)
+        ("q17_ivfpq_adc", 3),
         # r11: the dedup pair paths have NO corpus-sized join at any
         # scale (bucket-aggregated pair generation); the only join that
         # may appear is the tiny hot-bucket anti join (None = don't pin
