@@ -280,11 +280,9 @@ def load_star_schema(
     is appended after that. Returns row-count metrics, including
     rejected rows (observable, unlike ``main.py:116-117``); the dimension
     counts are those of the staged snapshots."""
-    from rpa_etl_investing_spark.operators.caching import persist_once
-
     # parse the batch once: both counts and every use of the clean rows
     # read the persisted parsed relation, never the raw batch again
-    parsed = persist_once(_parse_raw(raw))
+    parsed = _parse_raw(raw).persist()
     try:
         clean = _split_parsed(parsed).clean
         counts = parsed.agg(

@@ -243,11 +243,7 @@ def cap_band_buckets(
     aggregation ever sees it (guide §2.5)."""
     if max_bucket is None:
         return bands
-    # persisted so repeated invocations of the same pipeline (bench
-    # reps, audit + pairs in one session) reuse the counted hot set
-    # (same bounded plan-keyed registry as the signature persist; the
-    # hot set is usually 0 rows)
-    hot = _keep_or_reuse(
+    hot = (
         bands.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_bsz"))
         .filter(F.col("_bsz") > max_bucket)
@@ -345,11 +341,10 @@ def minhash_candidate_pairs(
     the grouped key is 16 bytes instead of a ~40-char string — same
     buckets, fewer shuffled bytes (guide §2.3 narrower types).
 
-    The signature relation is persisted (``_keep_or_reuse``): the cap's
-    count pass and the bucket aggregation both consume it, and repeated
-    invocations (bench reps, audit + pairs) reuse the warm relation;
-    the cached rows are tiny (17 longs per doc)."""
-    sig = _keep_or_reuse(minhash_signatures_long(docs, text_col))
+    The signature relation is checkpointed: the cap's count pass and
+    the bucket aggregation both consume it, and the checkpointed rows
+    are tiny (17 longs per doc)."""
+    sig = minhash_signatures_long(docs, text_col).localCheckpoint(eager=False)
     rpb = N_MINHASH // N_BANDS
     pow31 = "CAST(2147483648 AS BIGINT)"
     parts = []
@@ -508,34 +503,12 @@ def simhash64_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# The dedup operators' persisted relations (simhash64 signatures,
-# minhash signatures, hot-bucket lists) live in the unified registry
-# (operators/caching.py) under the "dedup_sigs" scope — the bounded-LRU
-# sameResult-keyed lifecycle: returned pair DataFrames are LAZY and
-# read these caches from both sides of their self-joins, so the
-# operators cannot unpersist before returning; instead identical plans
-# (bench reps, test loops) reuse the warm relation and distinct corpora
-# evict the least-recently-used entry once the cap is hit. Entries are
-# applicationId-scoped, so a stop/restart of the SparkSession in one
-# process cannot hand back a DataFrame bound to a dead SparkContext
-# (ADVICE r5). Each cached relation is tiny (17 longs per doc / a
-# hot-key list), so the cap bounds memory at a few corpora's worth.
-_SIG_SCOPE = "dedup_sigs"
-
-
-def _keep_or_reuse(df: DataFrame) -> DataFrame:
-    from rpa_etl_investing_spark.operators.caching import keep_or_reuse
-
-    return keep_or_reuse(df, _SIG_SCOPE)
-
-
-def release_sig_caches() -> None:
-    """Unpersist every relation cached by the dedup operators
-    (:func:`simhash64_hamming_pairs`, :func:`minhash_candidate_pairs`).
-    Only call once previously returned DataFrames have been consumed."""
-    from rpa_etl_investing_spark.operators.caching import release_scope
-
-    release_scope(_SIG_SCOPE)
+# An intermediate that is read more than once is checkpointed and lives
+# as long as its plan: the LAZY pair DataFrames below read their
+# signatures from both the cap's count pass and the bucket aggregation,
+# the checkpoint's blocks belong to an RDD that only that plan
+# references, and Spark's ContextCleaner frees them once the plan is
+# garbage.
 
 
 def simhash64_hamming_pairs(
@@ -564,14 +537,14 @@ def simhash64_hamming_pairs(
     Inert at every fixture scale (the brute-force oracle proves it)."""
     if max_hamming > 3:
         raise ValueError(f"4 bands guarantee recall only for max_hamming <= 3")
-    # Persist the signatures: the occupancy cap's count pass and the
+    # Checkpoint the signatures: the occupancy cap's count pass and the
     # bucket aggregation both consume the signature pipeline (explode →
     # distinct → 64-vote aggregate), and fresh expression ids per
-    # branch defeat Spark's exchange reuse — without the cache the
+    # branch defeat Spark's exchange reuse — without the checkpoint the
     # whole aggregation runs twice per action. At corpus scale the
-    # cached relation is one row of (id, long, 4×int) per doc — tiny
-    # next to the token explode it prevents re-running.
-    sig = _keep_or_reuse(simhash64_signatures(docs, text_col))
+    # checkpointed relation is one row of (id, long, 4×int) per doc —
+    # tiny next to the token explode it prevents re-running.
+    sig = simhash64_signatures(docs, text_col).localCheckpoint(eager=False)
     # stack() emits the same (band_no, band_key) rows as the previous
     # explode-of-struct-array spelling with one parsed generator instead
     # of ~30 Column calls (r10 driver-latency pass)
@@ -613,7 +586,7 @@ def simhash64_bucket_audit(
     the hottest bucket's size. A capped 100 TB dedup run ships this
     row next to its pair counts so a dropped boilerplate cluster is a
     visible metric, never a silent recall hole."""
-    sig = _keep_or_reuse(simhash64_signatures(docs, text_col))
+    sig = simhash64_signatures(docs, text_col)
     stack_args = ", ".join(f"{b}, band{b}" for b in range(4))
     sizes = (
         sig.selectExpr(f"stack(4, {stack_args}) AS (band_no, band_key)")

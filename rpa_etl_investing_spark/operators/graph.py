@@ -37,26 +37,12 @@ from pyspark.sql import functions as F
 
 GRID = 1_000_000_000
 
-# Persisted edge lists from prior pagerank()/bfs_hops() calls live in
-# the unified registry (operators/caching.py) under the "graph_edges"
-# scope. The returned ranks DataFrame is LAZY and references the
-# persisted relation once per unrolled iteration, so the producer
-# cannot unpersist before returning (consumers would silently
-# re-expand the fact-aggregation subtree into every iteration — the
-# exact rescan the cache prevents). keep() retires the previous call's
-# cache, bounding the leak at one live relation no matter how many
-# times tests/bench invoke the operator.
-from rpa_etl_investing_spark.operators.caching import keep, release_scope
-
-_EDGE_SCOPE = "graph_edges"
-_KCORE_SCOPE = "graph_kcore"
-
-
-def release_edge_caches() -> None:
-    """Unpersist every edge list cached by prior :func:`pagerank` /
-    :func:`bfs_hops` calls. Only call once all previously returned rank
-    DataFrames have been consumed — their plans read these caches."""
-    release_scope(_EDGE_SCOPE)
+# The returned DataFrames are LAZY and read their aggregated edge list
+# once per unrolled iteration; left uncheckpointed, Catalyst re-expands
+# the caller's fact-aggregation subtree into every iteration. An
+# intermediate that is read more than once is checkpointed and lives
+# as long as its plan: Spark's ContextCleaner frees the checkpoint's
+# blocks once nothing references the returned DataFrame.
 
 
 def bfs_hops(edges: DataFrame, source, max_hops: int = 4) -> DataFrame:
@@ -69,18 +55,14 @@ def bfs_hops(edges: DataFrame, source, max_hops: int = 4) -> DataFrame:
 
     Scale shape: same contract as :func:`pagerank` — the caller builds
     ``edges`` by aggregating the fact table down to the entity graph,
-    this operator persists that aggregated relation once (retiring the
-    previous call's cache, see ``_LIVE_EDGE_CACHES``) and each of the
+    this operator checkpoints that aggregated relation once and each of the
     ``max_hops`` unrolled steps is a keyed hash join + min-aggregate on
     the small graph. No driver-side state; the frontier never leaves
     the cluster."""
-    e = keep(
-        edges.select(
-            F.col("src").cast("bigint").alias("src"),
-            F.col("dst").cast("bigint").alias("dst"),
-        ),
-        _EDGE_SCOPE,
-    )
+    e = edges.select(
+        F.col("src").cast("bigint").alias("src"),
+        F.col("dst").cast("bigint").alias("dst"),
+    ).localCheckpoint(eager=False)
     spark = edges.sparkSession
     dist = spark.range(1).select(
         F.lit(source).cast("bigint").alias("node"), F.lit(0).alias("hops")
@@ -112,17 +94,16 @@ def pagerank(
     """
     n_nodes = nodes.agg(F.count("*").cast("bigint").alias("_n"))
     outw = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("wout"))
-    # Pre-join the out-weight once and PERSIST: the unrolled loop
-    # references this relation once per iteration, and without the cache
-    # Catalyst re-expands the whole edge-building subtree (the fact
-    # aggregation!) into every iteration — k rescans of the fact table.
-    # With it, the fact is scanned once and iterations join the cached
-    # aggregated graph (asserted in tests/test_plans.py).
-    ew = keep(
-        edges.join(outw, "src").select(
-            "src", "dst", F.col("w").cast("bigint").alias("w"), "wout"
-        ),
-        _EDGE_SCOPE,
+    # Pre-join the out-weight once and CHECKPOINT: the unrolled loop
+    # references this relation once per iteration, and without the
+    # checkpoint Catalyst re-expands the whole edge-building subtree (the
+    # fact aggregation!) into every iteration — k rescans of the fact
+    # table. With it, the fact is scanned once and iterations join the
+    # checkpointed aggregated graph (asserted in tests/test_plans.py).
+    ew = (
+        edges.join(outw, "src")
+        .select("src", "dst", F.col("w").cast("bigint").alias("w"), "wout")
+        .localCheckpoint(eager=False)
     )
 
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
@@ -152,13 +133,6 @@ def pagerank(
     return ranks
 
 
-def release_kcore_caches() -> None:
-    """Unpersist the per-round relations cached by prior
-    :func:`kcore_peel` calls. The RESULT DataFrame reads the last
-    round's cache, so only call once it has been consumed."""
-    release_scope(_KCORE_SCOPE)
-
-
 def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Bounded k-core peeling (Seidman '83; the distributed peel is
     Montresor et al.'s iterative formulation): symmetrize ``edges``
@@ -178,30 +152,25 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     # Each round's edge set is referenced THREE times by the next round
     # (degree aggregate + both endpoint semi joins): left fully lazy,
     # the unrolled tree holds 3^rounds copies of the caller's
-    # fact-sized edge aggregation. A lazy persist per round keeps the
+    # fact-sized edge aggregation. A lazy checkpoint per round keeps the
     # plan linear — every reference compiles to a scan of the round's
-    # cached relation — with NO driver action anywhere (measured 63 s →
-    # 19 s at sf0.001, on par with the other unrolled graph queries).
-    # Previous calls' caches retire first; the result reads the last
-    # round's cache, so this call cannot unpersist its own.
-    sym = keep(
+    # checkpointed relation (measured 63 s → 19 s at sf0.001 with the
+    # equivalent persist, on par with the other unrolled graph queries).
+    e = (
         edges.select("src", "dst")
         .union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .distinct(),
-        _KCORE_SCOPE,
+        .distinct()
+        .localCheckpoint(eager=False)
     )
-    e = sym
     for _ in range(rounds):
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
         alive = deg.filter(F.col("_deg") >= k).select("src")
-        e = keep(
-            e.join(alive, "src", "left_semi").join(
-                alive.select(F.col("src").alias("dst")), "dst", "left_semi"
-            ),
-            _KCORE_SCOPE,
-            retire=False,
+        e = (
+            e.join(alive, "src", "left_semi")
+            .join(alive.select(F.col("src").alias("dst")), "dst", "left_semi")
+            .localCheckpoint(eager=False)
         )
     return e.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")

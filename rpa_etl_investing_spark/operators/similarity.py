@@ -242,7 +242,7 @@ def prep_vectors(
     centroid-scoring cross join past a few-split scan AND pre-satisfies
     the argmax window's (id) shuffle; computing ``vec_norm`` here means
     no downstream stage ever re-derives it. Callers running several
-    passes over the same corpus (Lloyd refinement) persist THIS frame so
+    passes over the same corpus (Lloyd refinement) checkpoint THIS frame so
     the scan+shuffle+norm work happens once, not once per pass."""
     from rpa_etl_investing_spark.operators.dedup import spread
 
@@ -443,16 +443,12 @@ def ivf_topk(
     centroids = corpus.filter(F.col(id_col) < n_centroids)
     # one corpus scan+shuffle+norm pass shared by every assignment
     # (1 + lloyd_iters of them) — the classic cache-the-working-set
-    # k-means shape. The entry stays in the CacheManager after the query
-    # completes (same documented posture as the minhash signature
-    # persist): tiny per row (id, vec, norm), MEMORY_AND_DISK evicts
-    # LRU under pressure; sessions running many index builds can
-    # spark.catalog.clearCache() between them.
+    # k-means shape. An intermediate that is read more than once is
+    # checkpointed and lives as long as its plan: once the returned
+    # DataFrame is garbage, Spark's ContextCleaner frees the blocks.
     prep = prep_vectors(corpus, id_col, vec_col)
     if lloyd_iters:
-        from rpa_etl_investing_spark.operators.caching import persist_once
-
-        prep = persist_once(prep)
+        prep = prep.localCheckpoint(eager=False)
     for _ in range(lloyd_iters):
         seed_cells = ivf_assign_cells(
             prep, centroids, id_col, vec_col, prepared=True
@@ -460,22 +456,20 @@ def ivf_topk(
         centroids = lloyd_refine_centroids(seed_cells, id_col, vec_col)
     if queries_in_corpus:
         qkeys = queries.select(id_col).distinct()
-        # one final pass at nprobe probes serves BOTH sides; persisted
+        # one final pass at nprobe probes serves BOTH sides; checkpointed
         # because both consume it — this relation IS the IVF posting
-        # list an index build materializes (same cache posture as prep)
+        # list an index build materializes (same lifetime as prep)
         assigned = ivf_assign_cells(
             prep, centroids, id_col, vec_col, nprobe, prepared=True
         )
         if nprobe > 1:
-            from rpa_etl_investing_spark.operators.caching import persist_once
-
-            assigned = persist_once(assigned)
+            assigned = assigned.localCheckpoint(eager=False)
         corpus_cells = assigned.filter(F.col("probe_rank") == 1).drop("probe_rank")
         # r11 (guide §3.1; VERDICT r10 #8): query_cells is bounded by
         # |qkeys| × nprobe — qkeys itself already rides a broadcast, so
         # the probe side is broadcastable whenever this branch is viable
         # at all. Hint it explicitly: the planner's size estimate for a
-        # filter-of-a-window-of-a-cache is garbage, and the r6 100×
+        # filter-of-a-window-of-a-checkpoint is garbage, and the r6 100×
         # probe measured the cell-id join flipping to a SortMergeJoin
         # that shuffled the ENTIRE corpus assignment for 64 probe rows.
         query_cells = F.broadcast(
@@ -625,26 +619,23 @@ def semantic_dedup(
     per-cell work, exactly like IVF. The loser set is id-only
     (vectors never ride through the distinct), and the final drop is
     an anti join on the id."""
-    from rpa_etl_investing_spark.operators.caching import keep
-
     cent = corpus.filter(F.col(id_col) < n_centroids).select(id_col, vec_col)
     # The assignment feeds THREE consumers (both pair sides + the final
     # anti join); fresh expression ids per branch defeat exchange reuse,
-    # so without the persist the corpus scan + norm pass + argmax
+    # so without the checkpoint the corpus scan + norm pass + argmax
     # assignment run three times per action (same measurement as
-    # ivf_topk's two-consumer case). Persist ONLY the compact
-    # (id, cell_id, vec_norm) projection — caching.py's rule is that
-    # fact-sized VECTOR-carrying relations stay unpersisted (at corpus
-    # scale the full-embedding cache would hold the entire corpus'
-    # vectors in MEMORY_AND_DISK; ADVICE r5). The pair sides re-attach
-    # embeddings by joining the pruned (id, vec) corpus scan back to
-    # the cached assignment — rescanning a two-column parquet
-    # projection is the cheap path at 100 TB. keep() retires the
-    # previous call's cache, bounding the leak at one relation.
-    cells = keep(
-        ivf_assign_cells(corpus, cent, id_col, vec_col, nprobe=1).select(
-            id_col, "cell_id", "vec_norm"
-        )
+    # ivf_topk's two-consumer case). An intermediate that is read more
+    # than once is checkpointed and lives as long as its plan; only the
+    # compact (id, cell_id, vec_norm) projection is checkpointed, never
+    # a fact-sized VECTOR-carrying relation (at corpus scale that would
+    # hold the entire corpus' vectors in block storage). The pair sides
+    # re-attach embeddings by joining the pruned (id, vec) corpus scan
+    # back to the checkpointed assignment — rescanning a two-column
+    # parquet projection is the cheap path at 100 TB.
+    cells = (
+        ivf_assign_cells(corpus, cent, id_col, vec_col, nprobe=1)
+        .select(id_col, "cell_id", "vec_norm")
+        .localCheckpoint(eager=False)
     )
     withvec = corpus.select(id_col, vec_col).join(cells, id_col)
     a = withvec.selectExpr(

@@ -2182,10 +2182,10 @@ def analytics_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on the group column; the only ordered windows run inside
     value-range shards (~1/n_shards of a group) or over the
     constant-sized (groups × shards) count frame. The 2-column fact
-    projection is re-scanned by each pass rather than cached — at
+    projection is re-scanned by each pass rather than checkpointed — at
     100 TB a pruned parquet rescan is cheaper than materializing a
-    fact-sized relation (operators/caching.py doctrine; the small
-    aggregated medians DO ride broadcast)."""
+    fact-sized relation (the small aggregated medians DO ride
+    broadcast)."""
     from rpa_etl_investing_spark.operators.prefix import exact_quantiles
 
     v = tbl(spark, sf_dir, "orders").select(
@@ -2415,16 +2415,16 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics run on the per-key table (rows = |keys|, not |fact|);
     both quantized divisions divide exact BIGINTs in IEEE doubles, the
     same on any engine."""
-    from rpa_etl_investing_spark.operators.caching import keep
     from rpa_etl_investing_spark.operators.prefix import exact_quantiles
 
-    # persist the per-key count table (rows = |keys|, a huge reduction
+    # checkpoint the per-key count table (rows = |keys|, a huge reduction
     # from the fact): the quantile selection and the summary aggregate
     # both read it repeatedly
-    c = keep(
+    c = (
         tbl(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_suppkey").alias("k"))
         .agg(F.count("*").cast("bigint").alias("cnt"))
+        .localCheckpoint(eager=False)
     )
     qs = exact_quantiles(c, "cnt", {"p50": 0.5, "p90": 0.9, "p99": 0.99})
     agg = c.agg(

@@ -2715,25 +2715,26 @@ def llm_embedding_pca_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     far inside decimal range) each renormalize to the 1e6 grid by
     max-|component| with sign-magnitude division, which truncation-
     agnostic both engines compute identically. The bounded d×d gram is
-    persisted via the retire-previous cache (operators/caching.py), so
-    the three iteration branches don't re-expand the corpus scan.
+    read by all three iteration branches, so it is checkpointed and
+    lives as long as the returned plan; the branches never re-expand
+    the corpus scan.
 
     Convergence to the dominant eigenvector needs v0 non-orthogonal to
     it — e_0 scaled to the grid is the standard deterministic choice;
     three iterations are enough to pin the metric's value as a
     regression signature (the goal here), not to converge to machine
     precision."""
-    from rpa_etl_investing_spark.operators.caching import keep
     from rpa_etl_investing_spark.operators.similarity import gram_matrix
 
     # The gram is bounded at d(d+1)/2 cells (d=64 → 2080 rows): collapse
-    # it onto ONE partition before caching so the three iteration
+    # it onto ONE partition before checkpointing so the three iteration
     # branches schedule single-task stages instead of
     # shuffle-partition-wide waves of empty tasks.
-    tri = keep(
+    tri = (
         gram_matrix(tbl(spark, sf_dir, "embeddings"))
         .select("i", "j", "s_q")
         .coalesce(1)
+        .localCheckpoint(eager=False)
     )
     full = tri.unionByName(
         tri.filter(F.col("i") != F.col("j")).select(
@@ -3750,22 +3751,21 @@ def llm_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline). Cross-doc match pairs, when needed, come off the same
     df relation bucketed by fingerprint — never an all-pairs join.
 
-    The signature relation goes through the bounded persist registry
-    (the minhash-signature posture) for TWO reasons: both consumers
-    (the explode and the final join-back) read it once-computed, AND
-    the persist is an OPTIMIZER barrier — explode() directly over the
-    winnowing expression tree hangs Catalyst in
-    InferFiltersFromGenerate (measured: explain() itself never
-    returns — the rule clones the full HOF tree into inferred
+    The signature relation is checkpointed for TWO reasons: both
+    consumers (the explode and the final join-back) read it
+    once-computed, AND the checkpoint is an OPTIMIZER barrier —
+    explode() directly over the winnowing expression tree hangs
+    Catalyst in InferFiltersFromGenerate (measured: explain() itself
+    never returns — the rule clones the full HOF tree into inferred
     `size(..)>0 / isnotnull(..)` filters and later passes choke on the
-    duplicated expression; reproduced + isolated via
-    excludedRules). The InMemoryRelation substitution happens before
-    the optimizer runs, so the Generate only ever sees a leaf."""
-    from rpa_etl_investing_spark.operators.caching import keep_or_reuse
+    duplicated expression; reproduced + isolated via excludedRules).
+    The checkpoint is a leaf of the returned plan (an RDD scan that
+    lives as long as that plan), so the Generate only ever sees a
+    leaf."""
     from rpa_etl_investing_spark.operators.text import winnowing_fingerprints
 
-    s = keep_or_reuse(
-        winnowing_fingerprints(tbl(spark, sf_dir, "documents")), "winnow_sigs"
+    s = winnowing_fingerprints(tbl(spark, sf_dir, "documents")).localCheckpoint(
+        eager=False
     )
     e = s.select("doc_id", F.explode("selected").alias("fp"))
     dfc = e.groupBy("fp").agg(F.count(F.lit(1)).cast("bigint").alias("dfc"))

@@ -321,16 +321,14 @@ def multimodal_webdataset_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_id_range_shard,
     )
 
-    from rpa_etl_investing_spark.operators.caching import keep
-
     # the sharded scan references this relation through several branches
     # (bounds aggregate, local window, shard totals) — left lazy, each
     # branch re-runs the Arrow-batched binary decode (measured 30 s →
     # 3 s at sf0.001)
-    meta = keep(
-        decode_media_metadata(
-            attach_binary_media(tbl(spark, sf_dir, "documents"))
-        ).select("doc_id", "media_type", "n_bytes")
+    meta = (
+        decode_media_metadata(attach_binary_media(tbl(spark, sf_dir, "documents")))
+        .select("doc_id", "media_type", "n_bytes")
+        .localCheckpoint(eager=False)
     )
     c = sharded_running_sum(
         with_id_range_shard(meta, "doc_id"),

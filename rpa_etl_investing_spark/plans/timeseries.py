@@ -479,21 +479,21 @@ def timeseries_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw events (map-side partials, one shuffle); the recurrence then
     runs over the aggregated daily series, sharded by day range, with
     no per-key global sort anywhere in the plan."""
-    from rpa_etl_investing_spark.operators.caching import keep
     from rpa_etl_investing_spark.operators.prefix import with_id_range_shard
     from rpa_etl_investing_spark.operators.recurrence import ewma
 
     ev = tbl(spark, sf_dir, "events")
-    # persist the aggregated daily series: the recurrence references it
-    # through several branches (fold, summaries, final join-back) and a
-    # re-expansion would rescan the raw fact per branch
-    daily = keep(
+    # checkpoint the aggregated daily series: the recurrence references
+    # it through several branches (fold, summaries, final join-back) and
+    # a re-expansion would rescan the raw fact per branch
+    daily = (
         ev.filter(F.col("event_type").isNotNull())
         .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
         .agg(dsum("value", 6).alias("x"))
         .withColumn(
             "ord", F.datediff(F.col("day"), F.lit("1970-01-01")).cast("bigint")
         )
+        .localCheckpoint(eager=False)
     )
     sharded = with_id_range_shard(daily, "ord", n_shards=8)
     sm = ewma(sharded, ["event_type"], "ord", "x", alpha=0.25)
@@ -720,7 +720,6 @@ def timeseries_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes run inside day-range shards sharing one partitioning; the
     only unsharded windows are over the constant-sized per-shard
     totals frames."""
-    from rpa_etl_investing_spark.operators.caching import keep
     from rpa_etl_investing_spark.operators.prefix import (
         sharded_running_max,
         sharded_running_sum,
@@ -742,11 +741,14 @@ def timeseries_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = daily.groupBy("event_type").agg(
         F.expr("sum(x_q) div count(*)").cast("bigint").alias("k_q")
     )
-    # persist the AGGREGATED series (rows = types × days, fact-decoupled):
-    # both sharded scans reference it repeatedly and would otherwise
-    # re-expand the fact aggregation — and its raw scan — per branch
-    d = keep(
-        daily.join(k, "event_type").withColumn("dd", F.col("x_q") - F.col("k_q"))
+    # checkpoint the AGGREGATED series (rows = types × days,
+    # fact-decoupled): both sharded scans reference it repeatedly and
+    # would otherwise re-expand the fact aggregation — and its raw scan —
+    # per branch
+    d = (
+        daily.join(k, "event_type")
+        .withColumn("dd", F.col("x_q") - F.col("k_q"))
+        .localCheckpoint(eager=False)
     )
     sharded = with_id_range_shard(d, "ord", n_shards=8)
     p = sharded_running_sum(sharded, ["event_type"], ["ord"], "dd", "pp")
@@ -987,18 +989,18 @@ def timeseries_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry (0.75, −0.125, 0.875) is too; the re-associated scan is
     reconciled with the oracle's strict left fold on the 1e-6 grid
     (the EWMA discipline, unchanged)."""
-    from rpa_etl_investing_spark.operators.caching import keep
     from rpa_etl_investing_spark.operators.prefix import with_id_range_shard
     from rpa_etl_investing_spark.operators.recurrence import holt
 
     ev = tbl(spark, sf_dir, "events")
-    daily = keep(
+    daily = (
         ev.filter(F.col("event_type").isNotNull())
         .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
         .agg(dsum("value", 6).alias("x"))
         .withColumn(
             "ord", F.datediff(F.col("day"), F.lit("1970-01-01")).cast("bigint")
         )
+        .localCheckpoint(eager=False)
     )
     sharded = with_id_range_shard(daily, "ord", n_shards=8)
     sm = holt(sharded, ["event_type"], "ord", "x", alpha=0.25, beta=0.5)
@@ -1504,19 +1506,18 @@ def timeseries_holt_damped(spark: SparkSession, sf_dir: str) -> DataFrame:
     −0.125, 0.765625) is an exact binary double; the re-associated
     scan reconciles with the oracle's strict row-by-row recursive
     replay on the 1e-6 grid (the EWMA discipline)."""
-    from rpa_etl_investing_spark.operators.caching import keep
     from rpa_etl_investing_spark.operators.prefix import with_id_range_shard
     from rpa_etl_investing_spark.operators.recurrence import holt_damped
 
     ev = tbl(spark, sf_dir, "events")
-    daily = keep(
+    daily = (
         ev.filter(F.col("event_type").isNotNull())
         .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
         .agg(dsum("value", 6).alias("x"))
         .withColumn(
             "ord", F.datediff(F.col("day"), F.lit("1970-01-01")).cast("bigint")
-        ),
-        scope="holt_damped_daily",
+        )
+        .localCheckpoint(eager=False)
     )
     sharded = with_id_range_shard(daily, "ord", n_shards=8)
     sm = holt_damped(

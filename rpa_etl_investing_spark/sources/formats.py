@@ -96,15 +96,14 @@ def split_rejects(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(good, rejected): rejected rows are those the parser could not
     fully convert (non-null ``_corrupt_record``).
 
-    The scan is cached: Spark refuses a query whose referenced columns
-    are only the internal corrupt-record column (the parser can't know
-    corrupt-ness without materializing the real columns), and the cache
-    also makes good/bad two reads of one parse rather than two parses.
-    A long-lived pipeline would instead stage the parsed scan to parquet
+    The scan is checkpointed: Spark refuses a query whose referenced
+    columns are only the internal corrupt-record column (the parser
+    can't know corrupt-ness without materializing the real columns),
+    and the checkpoint also makes good/bad two reads of one parse rather
+    than two parses. It lives as long as the returned plans. A
+    long-lived pipeline would instead stage the parsed scan to parquet
     and split from there — same one-parse property, spillable."""
-    from rpa_etl_investing_spark.operators.caching import persist_once
-
-    df = persist_once(df)
+    df = df.localCheckpoint(eager=False)
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     return good, bad

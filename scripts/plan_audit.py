@@ -34,7 +34,7 @@ NOTES = {
     "q11_shipping_priority": "selective dim filter first, two fact shuffles, take-ordered top-k",
     "q12_similarity_ivf": "broadcast coarse quantizer, equi-join on cell id; Lloyd step is one 64-buffer hash aggregate (no posexplode fan-out), probe side broadcast-hinted (bounded by |qkeys|*nprobe) (r11)",
     "q13_zorder_layout": "Morton interleave computed map-side; one range exchange for the layout sort",
-    "q14_simhash64_pairs": "persisted 64-bit signatures; bucket-aggregated pair generation with bit_count Hamming filtered BEFORE the pair-distinct (r11) — no band self-join",
+    "q14_simhash64_pairs": "checkpointed 64-bit signatures; bucket-aggregated pair generation with bit_count Hamming filtered BEFORE the pair-distinct (r11) — no band self-join",
     "q15_heavy_hitters": "per-partition Misra-Gries in Arrow batches, broadcast-semi-join thin, exact recount; total tokens via map-side sum(size(split)) — the corpus explodes once (r11)",
     "q16_skew_dup_payments": "same-key self-join, residual integer band predicates; AQE skew split carves whale keys at scale (r10 measured the banded variant 4× slower at 100× — rejected, see SCALE.md)",
     "q17_ivfpq_adc": "encode = corpus repartitioned by vec_id, posexploded, joined on position to the broadcast posexploded codebook, one grouped SUM per (vector, centroid) in generated code; cell + code argmins are min(struct) aggregates on the same partitioning (no extra shuffle); per-query LUT map carried in the 16 probe rows, ADC distance a 4-term projection add; final top-5 window",
@@ -90,7 +90,7 @@ EXTRAS = {
     "timeseries_rolling_volatility": "daily-close aggregate first (window partition is days, not ticks), integer power sums over a 7-row frame",
     "json_variant_extract": "parse_json once per row; typed variant path lookups fold into one projection before the aggregate",
     "curation_corpus_report": "KPI composition: single aggregates joined as 1-row broadcasts; pair count reuses the capped band join",
-    "graph_nation_pagerank": "fact scanned once into the persisted aggregated edge list; 3 unrolled iterations read InMemoryTableScan + broadcast scalars",
+    "graph_nation_pagerank": "fact scanned once into the checkpointed aggregated edge list; 3 unrolled iterations read Scan ExistingRDD + broadcast scalars",
     "timeseries_vwap_anomaly": "one (flag,day) partial+final decimal aggregate over the fact; window runs on the tiny daily series",
     "llm_embedding_gram": "NO join: per-row upper-triangle fan-out, map-side partial_sum collapses before the single cell shuffle",
     "etl_merge_apply": "broadcast LeftAnti on the change keys — base scan map-only; upsert images unioned",

@@ -5,7 +5,10 @@ Imports ``__spark_entry__`` (the public surface), runs ``entry(spark)``
 as the smoke check, then every ``queries()`` entry at the given sf_dir
 with its ``oracle_sql()`` counterpart on DuckDB, comparing row count,
 column names and order-insensitive values. Prints one line per query
-and a JSON summary.
+and a JSON summary. The summary also reports what the sweep leaves
+behind: ``cache_manager_empty`` (no cached plan in the session) and
+``rdd_blocks_after_gc`` (RDDs still holding blocks after a Python and a
+JVM garbage collection, polled for up to 30 s).
 
 The SparkSession is deliberately BARE — ``SparkSession.builder`` with no
 repo confs — because that is what the round driver hands to ``queries()``.
@@ -55,7 +58,13 @@ def main() -> int:
     name_filter = args[1] if len(args) > 1 else None
 
     import __spark_entry__ as contract
-    from tests.parity import compare_frames, duck_connection, hashed_compare
+    from tests.parity import (
+        cache_manager_empty,
+        compare_frames,
+        duck_connection,
+        hashed_compare,
+        rdd_blocks_after_gc,
+    )
 
     # r10: the declared-wall skip hook (SPARK_GRAFT_SKIP, r8) is
     # RETIRED — the two former quadratic-output walls now evaluate on
@@ -172,6 +181,10 @@ def main() -> int:
         ),
         "n_bad": len(bad),
         "bad": bad,
+        # what the sweep leaves behind: no cached plan, and no RDD blocks
+        # once the finished queries' plans are garbage-collected
+        "cache_manager_empty": cache_manager_empty(spark),
+        "rdd_blocks_after_gc": rdd_blocks_after_gc(spark),
     }
     print(json.dumps(summary))
     return 1 if (bad or n_smoke == 0) else 0

@@ -147,6 +147,31 @@ def run_compare(spark, name: str, sf_dir: str) -> list[str]:
     return compare_frames(spark_pdf, duck_pdf)
 
 
+def cache_manager_empty(spark) -> bool:
+    """True when the session's CacheManager holds no cached plan."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def rdd_blocks_after_gc(spark, baseline: int = 0, timeout_s: float = 30.0) -> int:
+    """Number of RDDs still holding storage blocks once unreferenced
+    plans are garbage: runs Python's ``gc.collect()`` and the JVM's
+    ``System.gc()`` (so Spark's ContextCleaner sees the dead RDDs) and
+    polls ``getRDDStorageInfo()`` until the count is at most
+    ``baseline`` or ``timeout_s`` has passed."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    deadline = time.monotonic() + timeout_s
+    while True:
+        gc.collect()
+        sc._jvm.System.gc()
+        n = len(sc._jsc.sc().getRDDStorageInfo())
+        if n <= baseline or time.monotonic() >= deadline:
+            return n
+        time.sleep(1.0)
+
+
 # ---- size-gated in-engine checksum compare (r9, verdict item #6) ----------
 #
 # The sf1 comparator, not any engine plan, was the slowest thing in the r8

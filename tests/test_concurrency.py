@@ -2,12 +2,13 @@
 
 A real engine serves parallel queries; Spark supports driver-side
 thread pools (each action is an independent job), but the repo's own
-shared state — the persist registry's recency lists, the package-ship
-guard, the scratch-dir writers — had only ever run single-threaded.
-These tests hammer exactly those paths:
+shared state — the package-ship guard, the scratch-dir writers — had
+only ever run single-threaded. These tests hammer exactly those paths:
 
-- the LRU registry under 16 threads × mixed scopes (no lost entries,
-  no double-persist of the same plan, eviction respects the cap),
+- the queries that checkpoint reused intermediates, from 4 threads over
+  two scale factors with a concurrent ``clearCache`` (every result equals
+  the serial run), and what they leave behind once collected (an empty
+  CacheManager, no RDD blocks after a GC),
 - a representative 24-query slice of the registry driven from an
   8-thread pool WITH oracle comparison (the full-registry 8-thread
   sweep runs via ``scripts/verify_driver_contract.py --threads 8`` and
@@ -27,15 +28,13 @@ import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import functions as F
-
 import rpa_etl_investing_spark.plans as plans
 from tests.parity import run_compare
 
-# Slice chosen to cover the shared-state paths: dedup sig caches
-# (keep_or_reuse from both sides of self-joins), graph per-round keeps,
-# scratch-dir writers, pandas UDFs (package ship), and plain joins/aggs
-# for volume.
+# Slice chosen to cover the shared-state paths: dedup signature
+# checkpoints (read from both sides of the pair generation), graph
+# per-round checkpoints, scratch-dir writers, pandas UDFs (package
+# ship), and plain joins/aggs for volume.
 CONCURRENT_SLICE = [
     "llm_minhash_pairs",
     "llm_minhash_bucket_audit",
@@ -67,9 +66,9 @@ CONCURRENT_SLICE = [
 @pytest.mark.slow
 def test_concurrent_slice_matches_oracles(spark, sf_dir):
     """24 registry queries issued from 8 threads against ONE session,
-    each compared against its DuckDB oracle. Any registry race (wrong
-    cache entry served, unpersist of a relation another thread is
-    reading, scratch-dir collision) surfaces as a MISMATCH/ERROR."""
+    each compared against its DuckDB oracle. Any race (a relation
+    another thread is reading dropped, scratch-dir collision) surfaces
+    as a MISMATCH/ERROR."""
     names = [n for n in CONCURRENT_SLICE if n in plans.QUERIES]
     assert len(names) >= 20, f"slice went stale: {names}"
     failures: dict[str, list[str] | str] = {}
@@ -154,51 +153,69 @@ def test_scratch_dir_is_thread_keyed():
     ), "same-thread scratch path not stable"
 
 
-@pytest.mark.slow
-def test_lru_registry_thread_safety(spark):
-    """16 threads × 40 keep_or_reuse calls over 4 scopes and 12 distinct
-    plans per scope: the store must never lose the LRU invariant (≤ cap
-    live entries per scope), never serve a wrong-plan DataFrame, and
-    never throw from its own list surgery."""
-    from rpa_etl_investing_spark.operators import caching
+# Queries whose plans read checkpointed intermediates: minhash and
+# simhash64 signatures, the IVF posting list, the winnowing barrier, the
+# pagerank edge list and the k-core rounds.
+CHECKPOINT_QUERIES = [
+    "llm_minhash_pairs",
+    "llm_simhash64_hamming_pairs",
+    "llm_similarity_ivf",
+    "llm_winnowing_fingerprints",
+    "graph_nation_pagerank",
+    "graph_kcore",
+]
 
-    base = spark.range(0, 1000)
-    errors: list[str] = []
+
+def _rows(spark, name: str, sf: str) -> list[tuple]:
+    return sorted(tuple(r) for r in plans.QUERIES[name].fn(spark, sf).collect())
+
+
+def test_checkpointing_queries_under_mixed_traffic(spark, sf_dir):
+    """4 threads on one session run the checkpointing queries,
+    alternating two scale factors; one thread clears the session's
+    cache before each of its queries. Every result must equal the
+    serial run: a relation one query reads can be neither dropped nor
+    served to another by a different thread."""
+    other = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.01")
+    if os.path.abspath(sf_dir) == other or not os.path.isdir(other):
+        pytest.skip(f"needs a second fixture directory at {other}")
+    dirs = [os.path.abspath(sf_dir), other]
+    serial = {(n, d): _rows(spark, n, d) for n in CHECKPOINT_QUERIES for d in dirs}
+    wrong: list[str] = []
     lock = threading.Lock()
 
-    def hammer(tid: int) -> None:
-        try:
-            for i in range(40):
-                scope = f"conc_scope_{(tid + i) % 4}"
-                k = (tid * 7 + i) % 12
-                df = base.filter(F.col("id") % 12 == k).select(
-                    (F.col("id") * 2).alias("v")
-                )
-                got = caching.keep_or_reuse(df, scope, cap=6)
-                # the returned relation must compute the same result
-                n = got.filter(F.col("v") % 24 == (k * 2) % 24).count()
-                expected = df.count()
-                if n != expected:
+    def run(tid: int) -> None:
+        for i, name in enumerate(CHECKPOINT_QUERIES):
+            d = dirs[(tid + i) % 2]
+            try:
+                if tid == 0:
+                    spark.catalog.clearCache()
+                if _rows(spark, name, d) != serial[(name, d)]:
                     with lock:
-                        errors.append(
-                            f"t{tid}i{i}: wrong relation served "
-                            f"(n={n} expected={expected})"
-                        )
-        except Exception as e:  # noqa: BLE001
-            with lock:
-                errors.append(f"t{tid}: {type(e).__name__}: {e}")
+                        wrong.append(f"t{tid} {name} @ {d}: rows differ")
+            except Exception as e:  # noqa: BLE001 — collect, don't abort pool
+                with lock:
+                    wrong.append(f"t{tid} {name} @ {d}: {type(e).__name__}: {e}")
 
-    with ThreadPoolExecutor(max_workers=16) as pool:
-        list(pool.map(hammer, range(16)))
-    assert not errors, errors[:5]
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        list(pool.map(run, range(4)))
+    assert not wrong, wrong
 
-    # cap respected after the storm
-    with caching._LOCK:
-        for scope in [f"conc_scope_{j}" for j in range(4)]:
-            live = caching._STORE.get(scope, [])
-            assert len(live) <= 6, f"{scope}: {len(live)} entries > cap"
-    for j in range(4):
-        caching.release_scope(f"conc_scope_{j}")
+
+def test_checkpointing_queries_leave_no_storage(spark, sf_dir):
+    """Once the checkpointing queries are collected and dropped, the
+    session's CacheManager is empty and RDD storage returns to its
+    starting count within 30 s of a garbage collection: every
+    checkpoint lives only as long as its query's plan."""
+    from tests.parity import cache_manager_empty, rdd_blocks_after_gc
+
+    spark.catalog.clearCache()
+    start = rdd_blocks_after_gc(spark)
+    for name in CHECKPOINT_QUERIES:
+        assert plans.QUERIES[name].fn(spark, sf_dir).collect(), name
+    assert cache_manager_empty(spark)
+    left = rdd_blocks_after_gc(spark, baseline=start)
+    assert left <= start, f"{left} RDDs still hold blocks (started with {start})"
 
 
 def test_ship_package_concurrent_first_touch(spark):

@@ -4,6 +4,7 @@ centroids than vectors) must degrade gracefully, not throw."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rpa_etl_investing_spark.operators.dedup import (
@@ -398,23 +399,33 @@ def test_grid_proximity_coincident_points(spark):
     assert [(r.id_a, r.id_b, r.dist2) for r in rows] == [(1, 2, 0.0)]
 
 
-def test_dedup_cache_registry_keys_on_corpus_not_just_plan_shape(spark):
+def test_dedup_signatures_key_on_corpus_not_just_plan_shape(spark):
     """Regression: canonicalized plans ERASE data-source paths, so two
     different corpora with identical pipeline shapes must still get
-    their own cached signatures — reuse keyed on plan shape alone once
-    served sf0.01's signatures for sf0.001 (25 pairs instead of 28)."""
+    their own signatures — reuse keyed on plan shape alone once served
+    sf0.01's signatures for sf0.001 (25 pairs instead of 28)."""
     from rpa_etl_investing_spark.catalog import tbl
     from rpa_etl_investing_spark.operators import dedup
 
     d1 = tbl(spark, "/root/testdata/sf0.01", "documents")
     d2 = tbl(spark, "/root/testdata/sf0.001", "documents")
-    dedup.release_sig_caches()
     fresh1 = dedup.minhash_candidate_pairs(d1).count()
-    fresh2 = dedup.minhash_candidate_pairs(d2).count()  # d1 now cached
-    dedup.release_sig_caches()
+    fresh2 = dedup.minhash_candidate_pairs(d2).count()  # right after d1
     alone2 = dedup.minhash_candidate_pairs(d2).count()
     assert fresh2 == alone2
-    # and same-corpus invocations DO reuse the registry entry
+    # and a repeated same-corpus invocation gives the same pairs
     again1 = dedup.minhash_candidate_pairs(d1).count()
     assert again1 == fresh1
-    dedup.release_sig_caches()
+
+
+def test_spread_invariant_check_rejects_duplicate_keys(spark, monkeypatch):
+    from rpa_etl_investing_spark.operators.dedup import spread
+
+    monkeypatch.setenv("SPARK_GRAFT_CHECK_INVARIANTS", "1")
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (1, "a b c"), (2, "d e f")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="one row per"):
+        spread(docs, "doc_id")
+    ok = spread(docs.dropDuplicates(["doc_id"]), "doc_id")
+    assert ok.count() == 2

@@ -6,7 +6,7 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from rpa_etl_investing_spark.operators.graph import kcore_peel, release_kcore_caches
+from rpa_etl_investing_spark.operators.graph import kcore_peel
 
 
 def _edges(spark, pairs):
@@ -46,7 +46,6 @@ def test_matches_sequential_reference(spark):
     }
     assert got == _py_kcore(PAIRS, 3, 4)
     assert got == {0: 3, 1: 3, 2: 3, 3: 3}
-    release_kcore_caches()
 
 
 @pytest.mark.slow
@@ -86,7 +85,6 @@ def test_fixture_graph_converges_at_registered_rounds(spark, sf_dir):
     )
     q5 = {(r.node, r.deg) for r in kcore_peel(edges, 3, 5).collect()}
     assert q4 == q5
-    release_kcore_caches()
 
 
 def test_graph_that_fully_peels_is_empty(spark):
@@ -94,4 +92,24 @@ def test_graph_that_fully_peels_is_empty(spark):
     and the operator returns an empty frame rather than erroring."""
     edges = _edges(spark, [(0, 1), (1, 2), (2, 3)])
     assert kcore_peel(edges, 3, 4).count() == 0
-    release_kcore_caches()
+
+
+def test_graph_operators_checkpoint_instead_of_caching(spark):
+    """pagerank and kcore_peel read their reused relations from
+    checkpoints in the returned plan; nothing lands in the session's
+    CacheManager."""
+    from rpa_etl_investing_spark.operators.graph import pagerank
+    from tests.parity import cache_manager_empty
+
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1), (3, 1, 1)], "src long, dst long, w long"
+    )
+    nodes = spark.createDataFrame([(1,), (2,), (3,)], "node long")
+    ranks = pagerank(nodes, edges, iters=2)
+    plan = ranks._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") >= 2, plan
+    assert len(ranks.collect()) == 3
+    core = kcore_peel(edges, k=2, rounds=2)
+    assert sorted(tuple(r) for r in core.collect()) == [(1, 2), (2, 2), (3, 2)]
+    assert cache_manager_empty(spark)

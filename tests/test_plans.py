@@ -848,10 +848,25 @@ def test_pagerank_iterations_join_on_aggregated_graph(spark, sf_dir):
     edge list. One scan of lineitem in the plan — the iterations must
     not rescan the fact per round."""
     plan = _plan(QUERIES["graph_nation_pagerank"].fn(spark, sf_dir))
-    # every iteration must read the persisted aggregated edge list (one
-    # InMemoryTableScan per unrolled round), not re-expand the fact
+    # every iteration must read the checkpointed aggregated edge list
+    # (one Scan ExistingRDD per unrolled round), not re-expand the fact
     # aggregation subtree into live scans
-    assert plan.count("InMemoryTableScan") >= 3, plan
+    assert plan.count("Scan ExistingRDD") >= 3, plan
+
+
+def test_semantic_dedup_checkpoints_compact_projection_only(spark, sf_dir):
+    """The checkpointed cell assignment must exclude the embedding
+    column: checkpointing a fact-sized vector-carrying relation would
+    hold the whole corpus' vectors in block storage at scale."""
+    from rpa_etl_investing_spark.operators.similarity import semantic_dedup
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    out = semantic_dedup(emb, n_centroids=4, threshold=0.95)
+    assert out.count() > 0
+    scans = [ln for ln in _optimized(out).splitlines() if "LogicalRDD" in ln]
+    assert scans, "semantic_dedup no longer checkpoints its assignment"
+    for ln in scans:
+        assert "embedding" not in ln, f"vector column checkpointed: {ln}"
 
 
 def test_vwap_anomaly_single_fact_shuffle(spark, sf_dir):

@@ -94,19 +94,14 @@ def test_pareto_plan_is_linear_not_quadratic(spark, sf_dir):
 
 def test_bfs_reach_iterates_on_cached_graph(spark, sf_dir):
     """graph_nation_reach: the fact-table scan must appear in the plan
-    at most once (the persisted edge relation feeds every unrolled hop)
-    — mirrors the pagerank re-expansion guard."""
-    spark.catalog.clearCache()
+    at most once (the checkpointed edge relation feeds every unrolled
+    hop) — mirrors the pagerank re-expansion guard."""
     df = QUERIES["graph_nation_reach"].fn(spark, sf_dir)
     plan = _plan(df)
-    # every unrolled hop must read the persisted aggregated edge list
-    # (one InMemoryTableScan per hop join), never re-expand the fact
+    # every unrolled hop must read the checkpointed aggregated edge list
+    # (one Scan ExistingRDD per hop join), never re-expand the fact
     # aggregation into live scans — same guard as the pagerank test
-    assert plan.count("InMemoryTableScan") >= 4, plan
-    from rpa_etl_investing_spark.operators.graph import release_edge_caches
-
-    df.count()  # consume before retiring the cache
-    release_edge_caches()
+    assert plan.count("Scan ExistingRDD") >= 4, plan
 
 
 def test_running_sum_rejects_float_values(spark):

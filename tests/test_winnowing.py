@@ -5,7 +5,7 @@ of length ≥ w + k − 1 shares at least one selected fingerprint — plus
 the degenerate short-document cases and the optimizer-barrier
 regression (explode over the raw expression hangs Catalyst's
 InferFiltersFromGenerate; the registry query must go through the
-persist barrier)."""
+checkpoint barrier)."""
 
 from __future__ import annotations
 
@@ -75,7 +75,7 @@ def test_registry_query_plans_and_answers(spark, sf_dir):
     """Regression: the registered query must remain plannable on a
     bare-config session path — explode() straight over the winnowing
     expression hangs the optimizer (InferFiltersFromGenerate clones
-    the HOF tree into inferred filters); the persist barrier in the
+    the HOF tree into inferred filters); the checkpoint barrier in the
     registry query is what keeps the Generate's child a leaf."""
     from rpa_etl_investing_spark.plans.registry import QUERIES
 
