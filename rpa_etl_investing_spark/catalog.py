@@ -46,7 +46,7 @@ BOUNDED_TABLES = {"region", "nation"}
 # exactly this: graph_kcore's 4-round unrolled peel plan stringified
 # inside QueryExecution.explainString while 7 other heavy queries held
 # the bare 1g heap (VERDICT r8, "what's wrong" #1). 256 KiB is 3× the
-# largest real plan readout in PLANS.md (80 KiB) and makes the
+# largest real plan readout measured (80 KiB) and makes the
 # per-query diagnostic allocation O(1) regardless of how deeply an
 # iterative algorithm unrolled its lineage.
 MAX_PLAN_STRING_LENGTH = 262144

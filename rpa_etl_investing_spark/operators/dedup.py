@@ -198,10 +198,6 @@ def band_keys(sig: DataFrame) -> DataFrame:
     )
 
 
-# The numeric form IS the only form since the universal-hash rewrite; the
-# old name is kept for callers/tests that grew around the split.
-minhash_signatures_long = minhash_signatures
-
 # Band-bucket occupancy cap: the band self-join's skew guard, mirroring
 # ``max_df`` on the n-gram inverted index. A boilerplate-heavy corpus
 # puts thousands-to-millions of near-identical docs in ONE band bucket,
@@ -344,7 +340,7 @@ def minhash_candidate_pairs(
     The signature relation is checkpointed: the cap's count pass and
     the bucket aggregation both consume it, and the checkpointed rows
     are tiny (17 longs per doc)."""
-    sig = minhash_signatures_long(docs, text_col).localCheckpoint(eager=False)
+    sig = minhash_signatures(docs, text_col).localCheckpoint(eager=False)
     rpb = N_MINHASH // N_BANDS
     pow31 = "CAST(2147483648 AS BIGINT)"
     parts = []

@@ -144,7 +144,11 @@ def dim_upsert_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     insert-if-absent probes (main.py:124-135) with re-run-stable ids
     (SURVEY §7.4). New ids number by (md5-bucket, nome) — the oracle's
     global ROW_NUMBER mirrors the engine's per-bucket rank + cumulative
-    bucket offsets, which is how the assignment stays distributed."""
+    bucket offsets, which is how the assignment stays distributed.
+
+    Scale shape: the bucketed row_number partitions on an md5 prefix and
+    adds broadcast bucket offsets: no global window and no driver
+    collect."""
     from rpa_etl_investing_spark.etl.pipeline import upsert_dimension
 
     n = tbl(spark, sf_dir, "nation")

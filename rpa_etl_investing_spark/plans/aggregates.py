@@ -165,6 +165,10 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~25-40% faster at sf0.1, and the plan drops from 2 Exchanges to 1).
     On any real multi-split dataset widen was a no-op, so nothing
     changes at scale.
+
+    Scale shape: one exchange, on the group key. Each row is rounded
+    onto its DECIMAL(18,s) grid and summed in long-grid BIGINT buffers,
+    partial then final.
     """
     l = tbl(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))

@@ -39,7 +39,10 @@ from rpa_etl_investing_spark.plans.registry import register
 )
 def analytics_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: two fact joins + selective dim filter + grouped
-    revenue + top-k with total-order tie-break."""
+    revenue + top-k with total-order tie-break.
+
+    Scale shape: the selective dimension filter runs first, the two fact
+    joins shuffle once each, and the top-k is take-ordered."""
     c = tbl(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = tbl(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1997-03-15").cast("timestamp")
@@ -555,7 +558,10 @@ def analytics_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per order year — an eight-way star join feeding a conditional-sum /
     total-sum ratio per group. Both sums accumulate in DECIMAL and cast
     to DOUBLE before the single division, so the ratio is bit-identical
-    cross-engine."""
+    cross-engine.
+
+    Scale shape: every dimension of the eight-way join is broadcast into
+    the fact."""
     p = tbl(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     l = tbl(spark, sf_dir, "lineitem")
     s = tbl(spark, sf_dir, "supplier")
@@ -1288,7 +1294,10 @@ def graph_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast); every iteration after that joins a 25-row rank vector
     to a ≤625-row edge list — the iterative phase runs on the
     aggregated graph, never rescanning the fact, and the loop is
-    unrolled into the plan with no driver-side state."""
+    unrolled into the plan with no driver-side state.
+
+    The aggregated edge list is checkpointed once, so each unrolled
+    iteration reads that checkpoint's scan plus broadcast scalars."""
     from rpa_etl_investing_spark.operators.graph import pagerank
 
     li = tbl(spark, sf_dir, "lineitem")

@@ -122,7 +122,10 @@ _BANDS_CTES = f"""bands_all AS ({_BANDS_UNION}),
     """,
 )
 def llm_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L1: exact dedup by content hash, deterministic survivor."""
+    """L1: exact dedup by content hash, deterministic survivor.
+
+    Scale shape: the hash aggregate groups on sha256(text), so the
+    shuffle carries hashes, never text."""
     return exact_dedup(tbl(spark, sf_dir, "documents"))
 
 
@@ -163,7 +166,15 @@ def llm_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def llm_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2: LSH band-bucket candidate pairs + estimated Jaccard."""
+    """L2: LSH band-bucket candidate pairs + estimated Jaccard.
+
+    Scale shape: the shingle explode runs on documents already
+    partitioned by doc_id (no shuffle after the explode) and feeds a
+    numeric HashAggregate. Pairs come from bucket aggregation: one
+    collect_list per packed band key, with the i<j pairs emitted
+    map-side and the signatures carried in the structs
+    (operators/dedup.py minhash_candidate_pairs). No corpus-sized join
+    exists at any scale."""
     return minhash_candidate_pairs(tbl(spark, sf_dir, "documents"))
 
 
@@ -191,7 +202,9 @@ def llm_minhash_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs those drops remove, and the hottest bucket — the metric row a
     100 TB dedup run ships next to its pair counts so a capped bucket is
     visible, not silent. Inert at fixture scale (n_capped_buckets = 0),
-    which the oracle verifies too."""
+    which the oracle verifies too.
+
+    Scale shape: one compact-key hash aggregate, combined map-side."""
     return minhash_bucket_audit(tbl(spark, sf_dir, "documents"))
 
 
@@ -290,7 +303,10 @@ def _cos_sql(a: str, b: str) -> str:
 )
 def llm_similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3: exact cosine top-10 for 8 query vectors (broadcast cross join
-    baseline; integer-grid-quantized dot products)."""
+    baseline; integer-grid-quantized dot products).
+
+    Scale shape: the query side is broadcast; the corpus stays
+    partitioned and never shuffles."""
     emb = tbl(spark, sf_dir, "embeddings")
     return brute_force_topk(emb.filter(F.col("vec_id") < 8), emb, k=10).select(
         "query_id", "neighbor_id", "cos_sim", "rank"
@@ -381,7 +397,11 @@ def llm_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells by a broadcast coarse quantizer refined with one deterministic
     Lloyd step; each query probes its TWO nearest cells (nprobe=2), the
     same cell-id equi-join with 2× the probe rows (r2 verdict item #3;
-    see operators/similarity.py ivf_topk)."""
+    see operators/similarity.py ivf_topk).
+
+    The probe side is broadcast-hinted: it is bounded by
+    |queries|·nprobe rows. Without the hint, a 100× probe saw the join
+    flip to a sort-merge join that shuffled the whole corpus assignment."""
     emb = tbl(spark, sf_dir, "embeddings")
     return ivf_topk(
         emb.filter(F.col("vec_id") < 32), emb, n_centroids=8, k=5,
@@ -496,7 +516,10 @@ def llm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def llm_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4: corpus token-frequency top-20."""
+    """L4: corpus token-frequency top-20.
+
+    Scale shape: explode → partial count → final count, then a
+    take-ordered top-k."""
     return token_stats(tbl(spark, sf_dir, "documents"))
 
 
@@ -1682,7 +1705,11 @@ def llm_simhash64_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     width a real corpus would use; where the cap is inert (sf ≤ 0.01)
     this is the full brute-force recall proof, and where it bites
     (sf0.1: hot boilerplate buckets) the dropped pairs are counted by
-    the oracle-checked `llm_simhash64_bucket_audit`."""
+    the oracle-checked `llm_simhash64_bucket_audit`.
+
+    Scale shape: the 64-bit signatures are checkpointed, pairs come from
+    bucket aggregation rather than a band self-join, and the bit_count
+    Hamming filter runs before the pair-distinct."""
     from rpa_etl_investing_spark.operators.dedup import simhash64_hamming_pairs
 
     return simhash64_hamming_pairs(tbl(spark, sf_dir, "documents"))
@@ -1779,7 +1806,10 @@ def llm_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ONE pass with map-side upper-triangle fan-out, never a
     self-join; exact BIGINT cells on the 1e-6 grid. The oracle computes
     the same cells by the brute-force positional self-join, so the
-    match also proves the fan-out enumeration is complete."""
+    match also proves the fan-out enumeration is complete.
+
+    The map-side partial sum collapses the fan-out before the single
+    shuffle on the cell."""
     from rpa_etl_investing_spark.operators.similarity import gram_matrix
 
     return gram_matrix(tbl(spark, sf_dir, "embeddings"))
@@ -2798,7 +2828,10 @@ def llm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan; the MG superset guarantee makes the two identical. This is
     the scale path behind `llm_stop_tokens`' full scan (the reference
     has no corpus statistics at all — its workload is ~300 scraped
-    rows, /root/reference/main.py:149-157)."""
+    rows, /root/reference/main.py:149-157).
+
+    The total token count is a map-side sum(size(split(text))), so the
+    corpus explodes once."""
     from rpa_etl_investing_spark.operators.heavy_hitters import heavy_hitters
 
     docs = tbl(spark, sf_dir, "documents")

@@ -51,6 +51,9 @@ def flagship_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mirrors ``main.py:149-157`` (two dim joins + ``Setor.nome == 'Primário'``
     + ``Pais.nome.in_([...])`` + ORDER BY maxima DESC LIMIT 10), with
     ``o_orderkey`` as deterministic tie-breaker (SURVEY §7.4).
+
+    Scale shape: both dimension joins plan as BroadcastHashJoins and the
+    top-10 is a TakeOrderedAndProject, so the fact never shuffles.
     """
     orders = tbl(spark, sf_dir, "orders")
     customer = tbl(spark, sf_dir, "customer")

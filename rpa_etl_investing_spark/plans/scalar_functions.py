@@ -291,7 +291,11 @@ def datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def datetime_bucket_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9+A2: calendar bucketing — the batch form of a time-series rollup
-    over the reference's snapshot timeline (``main.py:44``)."""
+    over the reference's snapshot timeline (``main.py:44``).
+
+    Scale shape: epoch-aligned buckets are computed map-side, revenue
+    sums on the long BIGINT grid, and the only shuffle is the aggregate
+    on the bucket."""
     # r10: per-row grid BIGINTs instead of a DECIMAL(37,2) buffer — the
     # same long-grid rewrite as dsum (see plans/aggregates.py), and this
     # spelling now reproduces the oracle's scaled-BIGINT exit exactly to

@@ -263,7 +263,9 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     on either side — the layout pays the shuffle once at write time
     (sources/bucketing.py; shuffle absence asserted in
     tests/test_bucketing.py). The aggregate on top uses the standard
-    exact-decimal accumulation so the oracle matches bit-for-bit."""
+    exact-decimal accumulation so the oracle matches bit-for-bit.
+
+    Only the final, tiny groupBy shuffles."""
     from rpa_etl_investing_spark.sources.bucketing import (
         bucketed_join,
         write_bucketed,
@@ -466,7 +468,9 @@ def source_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file-level pruning contrast vs a linear sort is asserted in
     tests/test_sources.py. The z-value is a codegen'd integer
     expression (no UDF), so the layout pass is one projection + one
-    range-partitioned write at any scale."""
+    range-partitioned write at any scale.
+
+    The per-range footprint is one hash aggregate on the z-range."""
     from rpa_etl_investing_spark.sources.zorder import with_zvalue
 
     li = tbl(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
@@ -564,7 +568,9 @@ def source_file_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     zone-map/manifest primitive: the same query pattern audits what a
     partitioned sink contains, file by file, without any external
     catalog. The oracle aggregates the logical table directly, so the
-    match proves path-derived accounting equals data-derived truth."""
+    match proves path-derived accounting equals data-derived truth.
+
+    Scale shape: one aggregate over the manifest scan."""
     base = scratch_dir(_sf_tag(sf_dir), "orders_manifest")
     orders = tbl(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"

@@ -298,7 +298,9 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     'UNKNOWN' — enrichment never drops facts. The identical enrich plan
     runs stateless under readStream (no watermark, no join state — the
     dim is broadcast and probed map-side per micro-batch); the readStream
-    row-level parity test lives in tests/test_streaming.py."""
+    row-level parity test lives in tests/test_streaming.py.
+
+    The fact never shuffles before the final rollup."""
     from rpa_etl_investing_spark.plans.aggregates import dsum
     from rpa_etl_investing_spark.streaming import static_enrich
 

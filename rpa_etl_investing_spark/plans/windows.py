@@ -34,7 +34,9 @@ from rpa_etl_investing_spark.plans.registry import register
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1: top-k within each group — the per-sector top-10 the reference's
-    README describes (``README.md:49``) but ``main.py:149-157`` flattens."""
+    README describes (``README.md:49``) but ``main.py:149-157`` flattens.
+
+    Scale shape: a single shuffle, on the window partition key."""
     c = tbl(spark, sf_dir, "customer")
     n = tbl(spark, sf_dir, "nation")
     w = W.partitionBy("nation").orderBy(F.desc("acctbal"), F.asc("c_custkey"))

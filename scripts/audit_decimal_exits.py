@@ -24,10 +24,11 @@ direct site is inside its headroom at the largest fixture we run.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import rpa_etl_investing_spark.plans as plans  # noqa: E402
 

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rpa_etl_investing_spark.catalog import tbl
-from rpa_etl_investing_spark.operators.dedup import minhash_signatures_long, spread
+from rpa_etl_investing_spark.operators.dedup import minhash_signatures, spread
 from rpa_etl_investing_spark.plans import QUERIES
 
 
@@ -62,14 +62,14 @@ def test_spread_fanout_has_single_shuffle(spark, sf_dir):
     # Cached relations from other tests would let the CacheManager swap an
     # InMemoryTableScan into this plan — assert on the uncached shape.
     spark.catalog.clearCache()
-    sig = minhash_signatures_long(tbl(spark, sf_dir, "documents"))
+    sig = minhash_signatures(tbl(spark, sf_dir, "documents"))
     plan = _plan(sig)
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_spread_aggregate_is_hash_not_sort(spark, sf_dir):
     spark.catalog.clearCache()
-    sig = minhash_signatures_long(tbl(spark, sf_dir, "documents"))
+    sig = minhash_signatures(tbl(spark, sf_dir, "documents"))
     plan = _plan(sig)
     assert "HashAggregate" in plan, plan
     assert "SortAggregate" not in plan, plan
@@ -109,7 +109,7 @@ def test_spread_invariant_across_partition_settings(spark, sf_dir, n_shuffle):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_shuffle))
     try:
-        plan = _plan(minhash_signatures_long(tbl(spark, sf_dir, "documents")))
+        plan = _plan(minhash_signatures(tbl(spark, sf_dir, "documents")))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -13,11 +13,12 @@ No SparkSession needed: pure text parsing + a registry import.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
 
-SURVEY = "/root/repo/SURVEY.md"
+SURVEY = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SURVEY.md")
 
 
 def _section2() -> str:
