@@ -9,7 +9,7 @@ resolve → fact append) via ``foreachBatch``.
 
 ``foreachBatch`` is the right tool here (not a plain streaming sink)
 because the load is multi-table and stateful-on-disk: each micro-batch
-must upsert two dimensions and append facts atomically-enough, which is
+must upsert two dimensions and append facts under one commit, which is
 imperative logic over a batch DataFrame. State between batches lives in
 the warehouse itself (the dims), so the stream restarts cleanly from a
 checkpoint with no in-memory state to rebuild.

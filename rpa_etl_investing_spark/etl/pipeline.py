@@ -17,8 +17,10 @@ silent malformed-row drop               rejects split into an observable
 table schemas declared once as ORM      declared warehouse schemas
 models (``main.py:26-44``)              (``DIM_SCHEMA``, ``FACT_SCHEMA``):
                                         no footer-inference job per read
-dimensions upserted one after the       both dimensions staged concurrently,
-other (``main.py:122-135``)             published only once both are staged
+dimensions upserted one after the       both dimensions staged concurrently
+other (``main.py:122-135``)
+one COMMIT makes the whole load         one pointer swap per load
+visible (``main.py:147``)               (``sources/publish.py``)
 =====================================  =====================================
 
 At 100 TB the same shapes hold: the anti-join touches only the delta's
@@ -30,7 +32,6 @@ date.
 from __future__ import annotations
 
 import datetime as _dt
-import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -50,6 +51,7 @@ from rpa_etl_investing_spark.functions.locale import (
     parse_brazilian_number,
     parse_percent_variation,
 )
+from rpa_etl_investing_spark.sources import publish
 
 # Shape of one scraped row before normalization: the five td cell strings
 # (main.py:100-104) plus the caller-provided country (main.py:86,106).
@@ -65,7 +67,7 @@ RAW_SCRAPE_SCHEMA = T.StructType(
 )
 
 # Schemas of the warehouse tables this module writes. Every warehouse read
-# passes them (``_read_warehouse``): a bare ``spark.read.parquet`` launches
+# passes them (``_read_table``): a bare ``spark.read.parquet`` launches
 # a one-task Spark job per read just to infer the schema from a parquet
 # footer. ``tests/test_etl.py`` checks them against what Spark infers from
 # a load's output, so a writer change that drifts from them fails there.
@@ -259,10 +261,26 @@ def resolve_fact_keys(
     )
 
 
-def _read_warehouse(spark: SparkSession, warehouse: str, table: str, suffix: str = "") -> DataFrame:
-    """Read ``{warehouse}/{table}{suffix}`` with ``table``'s declared
-    schema: no job is launched to infer it from a parquet footer."""
-    return spark.read.schema(_WAREHOUSE_SCHEMAS[table]).parquet(f"{warehouse}/{table}{suffix}")
+def _read_table(spark: SparkSession, warehouse: str, table: str, version: int) -> DataFrame:
+    """``table`` as load ``version`` wrote it, with its declared schema:
+    that load's dimension snapshot, or the fact rows of loads 1..``version``."""
+    root = f"{warehouse}/{table}"
+    reader = spark.read.schema(_WAREHOUSE_SCHEMAS[table])
+    if table != "indice_financeiro":
+        return reader.parquet(publish.snapshot_dir(root, version))
+    # one snapshot directory per load: the base path lets Spark find
+    # ``dt_coleta`` below them; the select drops their version column
+    loads = [publish.snapshot_dir(root, v) for v in range(1, version + 1)]
+    return reader.option("basePath", root).parquet(*loads).select(*FACT_SCHEMA.fieldNames())
+
+
+def read_warehouse(spark: SparkSession, warehouse: str) -> dict[str, DataFrame]:
+    """The committed tables. The pointer is resolved once, so all three
+    are those of one whole load, whatever loads commit meanwhile."""
+    version = publish.committed_version(warehouse)
+    if version == 0:
+        raise FileNotFoundError(f"no committed load under {warehouse}")
+    return {table: _read_table(spark, warehouse, table, version) for table in _WAREHOUSE_SCHEMAS}
 
 
 def load_star_schema(
@@ -272,14 +290,14 @@ def load_star_schema(
     data_coleta: _dt.datetime,
 ) -> dict[str, int]:
     """Full load (``main.py:159-173`` minus the browser): transform →
-    upsert both dims → resolve FKs → single append write of the fact.
+    upsert both dims → resolve FKs → append the fact, as one commit.
 
-    The two dimensions read nothing of each other, so each is upserted
-    and staged to ``{name}.tmp`` on its own thread, in the caller's job
-    group; both are published only after both have staged, and the fact
-    is appended after that. Returns row-count metrics, including
-    rejected rows (observable, unlike ``main.py:116-117``); the dimension
-    counts are those of the staged snapshots."""
+    Load *n* stages version *n* of each table (``sources/publish.py``):
+    both dimensions, each on its own thread in the caller's job group,
+    then its fact rows. One swap of the warehouse pointer makes all three
+    visible, like the reference's COMMIT (``main.py:147``), and retires
+    dimension versions older than the previous one. Returns row-count
+    metrics, including rejected rows (unlike ``main.py:116-117``)."""
     # parse the batch once: both counts and every use of the clean rows
     # read the persisted parsed relation, never the raw batch again
     parsed = _parse_raw(raw).persist()
@@ -289,67 +307,47 @@ def load_star_schema(
             F.count_if(F.col("_ok")).alias("clean"),
             F.count_if(~F.col("_ok")).alias("rejected"),
         ).first()
-
-        def read_dim(name: str) -> DataFrame | None:
-            # Only a missing directory means "first run" (main.py:20-22); the
-            # warehouse is a local path (publishing below moves directories).
-            # Treating ANY read failure as first-run would silently rebuild the
-            # dim with fresh ids starting at 1 while historical fact rows still
-            # reference the old ids — corrupting every prior fact join — so
-            # any other failure raises. The read passes the declared schema
-            # and opens no parquet footer, so a corrupt file surfaces at its
-            # first scan: the ``{name}.tmp`` write below, before anything is
-            # published.
-            if not os.path.exists(f"{warehouse}/{name}"):
-                return None
-            return _read_warehouse(spark, warehouse, name)
+        committed = publish.committed_version(warehouse)
+        version = committed + 1
 
         def stage(name: str) -> int:
-            dim = upsert_dimension(read_dim(name), clean.select(F.col(name).alias("nome")))
-            dim.write.mode("overwrite").parquet(f"{warehouse}/{name}.tmp")
-            return _read_warehouse(spark, warehouse, name, ".tmp").count()
+            # Only an empty warehouse means "first run" (main.py:20-22): a
+            # dim rebuilt with fresh ids would orphan the committed facts'
+            # keys, so a committed dim that fails to read raises, at this
+            # write (the read opens no parquet footer).
+            existing = _read_table(spark, warehouse, name, committed) if committed else None
+            dim = upsert_dimension(existing, clean.select(F.col(name).alias("nome")))
+            publish.stage_snapshot(dim, f"{warehouse}/{name}", version)
+            return _read_table(spark, warehouse, name, version).count()
 
         # Each target is wrapped on the caller's thread: a pool thread does
-        # not inherit the caller's Spark local properties, so without it the
-        # staging jobs would leave the caller's job group (cancelJobGroup,
-        # per-group job accounting). Both must stage before anything is
-        # published.
+        # not inherit the caller's Spark local properties, so its jobs would
+        # leave the caller's job group (cancelJobGroup, per-group job counts).
         dims = ("pais", "setor")
         with ThreadPoolExecutor(max_workers=len(dims)) as pool:
             staged = [pool.submit(inheritable_thread_target(stage), name) for name in dims]
             dim_rows = dict(zip(dims, (f.result() for f in staged)))
 
-        # Publish the dim snapshots BEFORE appending the fact: the updated dims
-        # are supersets of the old ones, so publishing them first is always safe,
-        # whereas fact-first would — on a crash between the two steps — commit
-        # fact rows whose pais_id/setor_id exist only in the unswapped .tmp dirs.
-        # The rmtree+move pair itself is still not atomic (plain-parquet stand-in
-        # for MERGE INTO; a transactional table format is the production answer —
-        # SURVEY §7.4): a crash between them loses the old snapshot but never the
-        # new one, and never orphans committed fact keys.
-        import shutil
-
-        for name in dims:
-            shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
-            shutil.move(f"{warehouse}/{name}.tmp", f"{warehouse}/{name}")
-        dim_pais = _read_warehouse(spark, warehouse, "pais")
-        dim_setor = _read_warehouse(spark, warehouse, "setor")
+        dim_pais = _read_table(spark, warehouse, "pais", version)
+        dim_setor = _read_table(spark, warehouse, "setor", version)
+        # partition each load's facts by ingestion date: snapshot queries
+        # and retention drops prune whole directories (the scale form of
+        # main.py:44's timestamped inserts)
         fact = resolve_fact_keys(clean, dim_pais, dim_setor, data_coleta)
-
-        # partition the append-only fact by ingestion date: snapshot queries
-        # and retention drops prune whole directories, and each day's append
-        # never rewrites previous days (the scale form of main.py:44's
-        # timestamped inserts)
-        fact.withColumn("dt_coleta", F.to_date("data_coleta")).write.mode(
-            "append"
-        ).partitionBy("dt_coleta").parquet(f"{warehouse}/indice_financeiro")
-
+        fact = fact.withColumn("dt_coleta", F.to_date("data_coleta"))
+        publish.stage_snapshot(fact, f"{warehouse}/indice_financeiro", version, ["dt_coleta"])
+        fact_rows = _read_table(spark, warehouse, "indice_financeiro", version).count()
+        # the load becomes visible here; the vacuum keeps the version before
+        # it for readers that resolved the pointer before this commit
+        publish.commit_snapshot(warehouse, version)
+        for name in dims:
+            publish.vacuum_versions(f"{warehouse}/{name}", keep=2)
         return {
             "clean_rows": counts["clean"],
             "rejected_rows": counts["rejected"],
             "pais_rows": dim_rows["pais"],
             "setor_rows": dim_rows["setor"],
-            "fact_rows": _read_warehouse(spark, warehouse, "indice_financeiro").count(),
+            "fact_rows": fact_rows,
         }
     finally:
         parsed.unpersist()
@@ -360,9 +358,8 @@ def flagship_top10(spark: SparkSession, warehouse: str) -> DataFrame:
     (``main.py:149-157``): top-10 by ``maxima`` where setor='Primário'
     and pais IN (China, EUA), two broadcast dim joins, with ``nome`` as
     deterministic tie-breaker."""
-    fact = _read_warehouse(spark, warehouse, "indice_financeiro")
-    pais = _read_warehouse(spark, warehouse, "pais")
-    setor = _read_warehouse(spark, warehouse, "setor")
+    tables = read_warehouse(spark, warehouse)
+    fact, pais, setor = tables["indice_financeiro"], tables["pais"], tables["setor"]
     return (
         fact.join(F.broadcast(pais), fact.pais_id == pais.id)
         .join(F.broadcast(setor), fact.setor_id == setor.id)

@@ -198,11 +198,11 @@ def band_keys(sig: DataFrame) -> DataFrame:
     )
 
 
-# Band-bucket occupancy cap: the band self-join's skew guard, mirroring
+# Band-bucket occupancy cap: the bucket aggregation's skew guard, mirroring
 # ``max_df`` on the n-gram inverted index. A boilerplate-heavy corpus
 # puts thousands-to-millions of near-identical docs in ONE band bucket,
-# and the self-join then emits B² candidate pairs out of a single hot
-# bucket (r3 verdict item #2). Buckets above the cap are dropped whole —
+# whose member list then emits B² candidate pairs (r3 verdict item #2).
+# Buckets above the cap are dropped whole before the aggregation —
 # their members are near-identical enough that exact dedup + the other
 # three band buckets still cover them — and the drop is surfaced by
 # :func:`minhash_bucket_audit`. Inert at fixture scale (largest fixture
@@ -527,8 +527,8 @@ def simhash64_hamming_pairs(
     MinHash band join carries — the 100× scale probe measured this
     query as the repo's worst scaler (84.6 s, 41× for 100× data)
     precisely because a boilerplate bucket's pair fan-out is B². Hot
-    (band_no, band_key) buckets are dropped whole before the self-join
-    (:func:`cap_band_buckets`), and the drop is surfaced by
+    (band_no, band_key) buckets are dropped whole before the bucket
+    aggregation (:func:`cap_band_buckets`), and the drop is surfaced by
     :func:`simhash64_bucket_audit`, the oracle-checked metric row.
     Inert at every fixture scale (the brute-force oracle proves it)."""
     if max_hamming > 3:

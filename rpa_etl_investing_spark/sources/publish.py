@@ -20,13 +20,15 @@ rename:
 PHASE 1 (stage): the new snapshot is written to ``_staging-v<n>``; a
 crash here leaves garbage no reader ever looks at. The staged dir is
 then renamed to ``v=<n>`` — still invisible, readers only follow the
-pointer. PHASE 2 (commit): ``_LATEST`` is replaced via write-temp +
+pointer; a ``v=<n>`` left by a stage that never committed is replaced.
+PHASE 2 (commit): ``_LATEST`` is replaced via write-temp +
 ``os.rename``, which POSIX guarantees atomic on one filesystem — a
 reader sees either the old pointer or the new one, never a torn file
 and never a partial snapshot. Old versions stay readable (time travel,
 and in-flight readers that resolved the pointer before the swap keep a
 consistent view because snapshot dirs are immutable) until
-``vacuum_versions`` retires them.
+``vacuum_versions`` retires them. One pointer may commit several
+tables (``etl/pipeline.py``: one warehouse-level pointer per load).
 
 Scale notes: the pointer swap is one driver-side metadata operation —
 O(1) regardless of table size, same as a Delta commit; the snapshot
@@ -42,6 +44,7 @@ from this module as-is.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,11 +57,12 @@ def _pointer_path(table_dir: str) -> str:
 
 
 def committed_version(table_dir: str) -> int:
-    """The currently committed snapshot version (0 = nothing published)."""
+    """The committed snapshot version, 0 if no pointer exists. A garbled
+    pointer raises: read as 0, its snapshots would be restaged over."""
     try:
         with open(_pointer_path(table_dir)) as f:
-            return int(f.read().strip())
-    except (FileNotFoundError, ValueError):
+            return int(f.read())
+    except FileNotFoundError:
         return 0
 
 
@@ -67,22 +71,20 @@ def snapshot_dir(table_dir: str, version: int) -> str:
 
 
 def stage_snapshot(
-    df: DataFrame, table_dir: str, partition_by: list[str] | None = None
-) -> int:
-    """PHASE 1: write the next snapshot, fully, without committing it.
+    df: DataFrame, table_dir: str, version: int, partition_by: list[str] | None = None
+) -> None:
+    """PHASE 1: write snapshot ``version`` fully, without committing it.
 
-    Returns the staged version number. A reader following ``_LATEST``
-    cannot observe any of this work; a crash leaves the previous
-    snapshot untouched and committed."""
-    os.makedirs(table_dir, exist_ok=True)
-    version = committed_version(table_dir) + 1
+    ``version`` is above the committed one, so no reader can name it and
+    a crash leaves the committed snapshot untouched. A ``version``
+    directory left by a stage that never committed is replaced."""
     staging = os.path.join(table_dir, f"_staging-v{version}")
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staging)
+    shutil.rmtree(snapshot_dir(table_dir, version), ignore_errors=True)
     os.rename(staging, snapshot_dir(table_dir, version))
-    return version
 
 
 def commit_snapshot(table_dir: str, version: int) -> None:
@@ -107,7 +109,8 @@ def publish_snapshot(
     df: DataFrame, table_dir: str, partition_by: list[str] | None = None
 ) -> int:
     """Stage + commit in one call; returns the committed version."""
-    version = stage_snapshot(df, table_dir, partition_by)
+    version = committed_version(table_dir) + 1
+    stage_snapshot(df, table_dir, version, partition_by)
     commit_snapshot(table_dir, version)
     return version
 
@@ -127,8 +130,6 @@ def vacuum_versions(table_dir: str, keep: int = 2) -> list[int]:
     committed ones (never the committed version itself). Returns the
     versions removed. The grace window is the caller's contract with
     in-flight readers, exactly like Delta's VACUUM retention."""
-    import shutil
-
     committed = committed_version(table_dir)
     versions = sorted(
         int(name[2:])

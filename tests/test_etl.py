@@ -4,6 +4,9 @@ scrape-shaped fixture rows and assert star-schema invariants."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import threading
+from urllib.parse import unquote, urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +18,7 @@ from rpa_etl_investing_spark.etl import (
     transform_raw,
     upsert_dimension,
 )
+from rpa_etl_investing_spark.etl.pipeline import read_warehouse
 
 PIN_TS = dt.datetime(2026, 1, 15, 12, 0, 0)
 
@@ -118,11 +122,12 @@ def test_full_load_and_flagship_query(spark, raw_df, tmp_path):
     assert m1["fact_rows"] == 7
 
     # dimension uniqueness invariant (main.py:27,32)
-    pais = spark.read.parquet(f"{wh}/pais")
+    tables = read_warehouse(spark, wh)
+    pais = tables["pais"]
     assert pais.count() == pais.select("nome").distinct().count()
 
     # FK resolution invariant (main.py:38-39): every fact row resolves
-    fact = spark.read.parquet(f"{wh}/indice_financeiro")
+    fact = tables["indice_financeiro"]
     assert fact.filter(F.col("pais_id").isNull() | F.col("setor_id").isNull()).count() == 0
 
     # golden flagship result (main.py:149-157): Primário ∧ pais∈{China,EUA},
@@ -174,12 +179,17 @@ def test_declared_warehouse_schemas_match_written(spark, loaded_warehouse):
     def fields(schema):
         return [(f.name, f.dataType) for f in schema.fields]
 
-    for table, declared in (
-        ("pais", DIM_SCHEMA),
-        ("setor", DIM_SCHEMA),
-        ("indice_financeiro", FACT_SCHEMA),
+    tables = read_warehouse(spark, loaded_warehouse)
+    # (table, declared schema, directory levels from a part file up to the
+    # directory its schema is inferred from: a fact part file sits one
+    # ``dt_coleta=`` partition directory below its load's)
+    for table, declared, depth in (
+        ("pais", DIM_SCHEMA, 1),
+        ("setor", DIM_SCHEMA, 1),
+        ("indice_financeiro", FACT_SCHEMA, 2),
     ):
-        inferred = spark.read.parquet(f"{loaded_warehouse}/{table}").schema
+        dirs = {f.rsplit("/", depth)[0] for f in tables[table].inputFiles()}
+        inferred = spark.read.parquet(*dirs).schema
         assert fields(inferred) == fields(declared), table
 
 
@@ -210,9 +220,8 @@ def test_incremental_streaming_load(spark, tmp_path):
     finally:
         q.stop()
 
-    fact = spark.read.parquet(f"{warehouse}/indice_financeiro")
-    pais = spark.read.parquet(f"{warehouse}/pais")
-    setor = spark.read.parquet(f"{warehouse}/setor")
+    tables = read_warehouse(spark, warehouse)
+    fact, pais, setor = tables["indice_financeiro"], tables["pais"], tables["setor"]
     assert fact.count() == 2 * len(good_rows)  # one snapshot per micro-batch
     assert fact.select("data_coleta").distinct().count() == 2
     assert pais.count() == pais.select("nome").distinct().count() == 3
@@ -274,13 +283,23 @@ def test_scd2_audit_invariants(spark, sf_dir):
         assert r.n_inverted == 0, f"user {r.user_id}: inverted intervals"
 
 
+def _corrupt_committed(spark, warehouse, table):
+    """Overwrite every part file of ``table``'s committed snapshot."""
+    files = read_warehouse(spark, warehouse)[table].inputFiles()
+    assert files
+    for uri in files:
+        with open(unquote(urlparse(uri).path), "wb") as f:
+            f.write(b"not a parquet file")
+
+
 def test_failed_load_leaves_no_cached_relation(spark, raw_df, tmp_path):
-    """A load that raises part-way (here: a corrupt ``pais`` dimension,
-    which ``read_dim`` must re-raise rather than treat as a first run)
-    still unpersists its staged relation: the CacheManager ends empty."""
+    """A load that raises part-way (here: a corrupt committed ``pais``
+    dimension, which the load must re-raise rather than treat as a first
+    run) still unpersists its staged relation: the CacheManager ends
+    empty."""
     wh = tmp_path / "warehouse"
-    (wh / "pais").mkdir(parents=True)
-    (wh / "pais" / "part-00000.parquet").write_bytes(b"not a parquet file")
+    load_star_schema(spark, raw_df, str(wh), PIN_TS)
+    _corrupt_committed(spark, str(wh), "pais")
     spark.catalog.clearCache()
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         load_star_schema(spark, raw_df, str(wh), PIN_TS)
@@ -311,20 +330,16 @@ def test_failed_second_dimension_publishes_nothing(spark, raw_df, tmp_path):
     """A corrupt ``setor`` fails the load after ``pais`` has staged a new
     country: nothing is published, no fact is appended, no relation stays
     cached and no staging thread is left running."""
-    import threading
-
     wh = tmp_path / "warehouse"
     load_star_schema(spark, raw_df, str(wh), PIN_TS)
     new_country = spark.createDataFrame(
         [("Nikkei 225", "38.000,00", "38.500,00", "37.900,00", "+0,30%", "Japão")],
         RAW_SCRAPE_SCHEMA,
     )
-    pais_before = sorted(map(tuple, spark.read.parquet(str(wh / "pais")).collect()))
-    facts_before = spark.read.parquet(str(wh / "indice_financeiro")).count()
-    parts = list((wh / "setor").glob("part-*.parquet"))
-    assert parts
-    for part in parts:
-        part.write_bytes(b"not a parquet file")
+    tables = read_warehouse(spark, str(wh))
+    pais_before = sorted(map(tuple, tables["pais"].collect()))
+    facts_before = tables["indice_financeiro"].count()
+    _corrupt_committed(spark, str(wh), "setor")
 
     spark.catalog.clearCache()
     threads = threading.active_count()
@@ -333,6 +348,56 @@ def test_failed_second_dimension_publishes_nothing(spark, raw_df, tmp_path):
             spark, raw_df.unionByName(new_country), str(wh), PIN_TS + dt.timedelta(days=1)
         )
     assert threading.active_count() == threads
-    assert sorted(map(tuple, spark.read.parquet(str(wh / "pais")).collect())) == pais_before
-    assert spark.read.parquet(str(wh / "indice_financeiro")).count() == facts_before
+    tables = read_warehouse(spark, str(wh))
+    assert sorted(map(tuple, tables["pais"].collect())) == pais_before
+    assert tables["indice_financeiro"].count() == facts_before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_flagship_reads_overlapping_loads_see_whole_loads(spark, tmp_path):
+    """One thread runs seven 5,000-row loads into one warehouse while
+    another reads the flagship in a loop from the first commit on. No
+    read may fail, and every read must equal the flagship after some
+    whole number of loads: a load becomes visible all at once. Each
+    dimension keeps at most two versions afterwards."""
+    from perfbench import gen
+
+    wh = str(tmp_path / "warehouse")
+    oracle = gen.EtlOracle()
+    batches = []  # (path, expected load counts, expected flagship after it)
+    for b in range(7):
+        path = str(tmp_path / f"batch{b}.ndjson")
+        rows = gen.scrape_batch(path, 16, b, 5_000, 0.005)
+        batches.append((path, oracle.load(rows), oracle.flagship()))
+
+    first_commit, done = threading.Event(), threading.Event()
+    reads, failures = [], []
+
+    def read_loop():
+        first_commit.wait()
+        while not done.is_set():
+            try:
+                reads.append([tuple(r) for r in flagship_top10(spark, wh).collect()])
+            except Exception as e:  # noqa: BLE001 - every failed read is counted
+                failures.append(str(e)[:400])
+
+    reader = threading.Thread(target=read_loop)
+    reader.start()
+    try:
+        for b, (path, counts, _) in enumerate(batches):
+            raw = spark.read.schema(RAW_SCRAPE_SCHEMA).json(path)
+            assert load_star_schema(spark, raw, wh, PIN_TS + dt.timedelta(days=b)) == counts
+            first_commit.set()
+    finally:
+        done.set()
+        first_commit.set()
+        reader.join(timeout=120)
+    assert not reader.is_alive()
+
+    assert not failures, f"{len(failures)} of {len(reads) + len(failures)} reads failed: {failures[:2]}"
+    assert reads
+    whole_loads = [flagship for _, _, flagship in batches]
+    assert all(read in whole_loads for read in reads)
+    for dim in ("pais", "setor"):
+        versions = [d for d in os.listdir(f"{wh}/{dim}") if not d.startswith(("_", "."))]
+        assert len(versions) <= 2, (dim, versions)

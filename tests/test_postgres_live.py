@@ -195,7 +195,11 @@ def test_reference_star_schema_flagship_on_live_postgres(spark, tmp_path, pg):
     (main.py:149-157) and compare with our Spark implementation on the
     same warehouse — the full extract→transform→load→query loop of the
     reference, with its real database engine in the loop."""
-    from rpa_etl_investing_spark.etl.pipeline import flagship_top10, load_star_schema
+    from rpa_etl_investing_spark.etl.pipeline import (
+        flagship_top10,
+        load_star_schema,
+        read_warehouse,
+    )
     from rpa_etl_investing_spark.sources.scrape_source import scrape_frame
 
     wh = str(tmp_path / "wh")
@@ -217,10 +221,9 @@ def test_reference_star_schema_flagship_on_live_postgres(spark, tmp_path, pg):
             c.query(f"DROP TABLE IF EXISTS {t}")
         for t in ("pais", "setor", "indice_financeiro"):
             c.query(ddl[t])
+    tables = read_warehouse(spark, wh)
     for t in ("pais", "setor"):
-        write_via_pgwire(
-            spark.read.parquet(f"{wh}/{t}"), pg["address"], t, port=pg["port"]
-        )
+        write_via_pgwire(tables[t], pg["address"], t, port=pg["port"])
     fact_cols = [
         "nome",
         "pais_id",
@@ -232,7 +235,7 @@ def test_reference_star_schema_flagship_on_live_postgres(spark, tmp_path, pg):
         "data_coleta",
     ]
     write_via_pgwire(
-        spark.read.parquet(f"{wh}/indice_financeiro").select(*fact_cols),
+        tables["indice_financeiro"].select(*fact_cols),
         pg["address"],
         "indice_financeiro",
         port=pg["port"],

@@ -9,6 +9,7 @@ import os
 import pytest
 
 from rpa_etl_investing_spark.sources.publish import (
+    _pointer_path,
     commit_snapshot,
     committed_version,
     publish_snapshot,
@@ -33,14 +34,13 @@ def test_reader_never_sees_uncommitted_stage(spark, tmp_path):
     assert _rows(read_published(spark, table)) == {(1, "a"), (2, "b"), (3, "c")}
 
     v2 = spark.createDataFrame([(1, "a2"), (4, "d")], ["k", "v"])
-    staged = stage_snapshot(v2, table)  # phase 1 only — simulated crash
-    assert staged == 2
+    stage_snapshot(v2, table, 2)  # phase 1 only — simulated crash
     assert os.path.isdir(snapshot_dir(table, 2))  # the files DO exist
     # ... but the committed view is still v1, in full
     assert committed_version(table) == 1
     assert _rows(read_published(spark, table)) == {(1, "a"), (2, "b"), (3, "c")}
 
-    commit_snapshot(table, staged)  # recovery: one atomic swap
+    commit_snapshot(table, 2)  # recovery: one atomic swap
     assert _rows(read_published(spark, table)) == {(1, "a2"), (4, "d")}
 
 
@@ -70,12 +70,45 @@ def test_partitioned_publish_is_all_or_nothing(spark, tmp_path):
     )
     publish_snapshot(v1, table, partition_by=["k"])
     v2 = spark.createDataFrame([(9, "a"), (3, "b"), (4, "b")], ["v", "k"])
-    stage_snapshot(v2, table, partition_by=["k"])
+    stage_snapshot(v2, table, 2, partition_by=["k"])
     got = _rows(read_published(spark, table).select("v", "k"))
     assert got == {(1, "a"), (2, "a"), (3, "b"), (4, "b")}
     commit_snapshot(table, 2)
     got = _rows(read_published(spark, table).select("v", "k"))
     assert got == {(9, "a"), (3, "b"), (4, "b")}
+
+
+def test_publish_after_uncommitted_stage_replaces_it(spark, tmp_path):
+    """A crash between stage and commit leaves an uncommitted ``v=2``.
+    The next publish derives version 2 again and must replace it, not
+    fail on the non-empty directory: no reader can name a version above
+    the pointer."""
+    table = str(tmp_path / "t")
+    publish_snapshot(spark.createDataFrame([(1, "a")], ["k", "v"]), table)
+    stage_snapshot(spark.createDataFrame([(2, "lost")], ["k", "v"]), table, 2)
+    assert committed_version(table) == 1
+
+    new = spark.createDataFrame([(3, "b"), (4, "c")], ["k", "v"])
+    assert publish_snapshot(new, table) == 2
+    assert committed_version(table) == 2
+    assert _rows(read_published(spark, table)) == {(3, "b"), (4, "c")}
+
+
+def test_garbled_pointer_raises_and_keeps_committed(spark, tmp_path):
+    """Only a missing pointer means "nothing published". A garbled one
+    must raise: read as version 0, the next publish would restage — and
+    so delete — the committed ``v=1``."""
+    table = str(tmp_path / "t")
+    publish_snapshot(spark.createDataFrame([(1, "a")], ["k", "v"]), table)
+    with open(_pointer_path(table), "w") as f:
+        f.write("garbage")
+    with pytest.raises(ValueError):
+        committed_version(table)
+    with pytest.raises(ValueError):
+        publish_snapshot(spark.createDataFrame([(2, "b")], ["k", "v"]), table)
+    with pytest.raises(ValueError):
+        vacuum_versions(table)
+    assert _rows(spark.read.parquet(snapshot_dir(table, 1))) == {(1, "a")}
 
 
 def test_vacuum_never_removes_committed(spark, tmp_path):
